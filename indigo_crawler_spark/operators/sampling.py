@@ -93,36 +93,20 @@ def sample_corpus(
     appear — the property that makes incremental re-exports + re-sampling
     coherent. Returns ``{"rows_in", "rows_out", "by_stratum", "out_path"}``.
     """
-    import os
-
     from indigo_crawler_spark.plans.export import (
-        _pk_dir,
-        _read_export_manifest,
-        _write_export_manifest,
+        _read_source,
+        _write_product,
+        _write_product_manifest,
     )
 
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to sample"
-        )
+    src, df = _read_source(spark, corpus_path, "sample")
     if rates and not by:
         raise ValueError("rates requires by")
-    if by:
-        probe = spark.read.option("basePath", corpus_path).parquet(dirs[0])
-        if by not in probe.columns:
-            raise RuntimeError(
-                f"stratum column {by!r} not in corpus columns {probe.columns} "
-                "— annotate/split the export first"
-            )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
+    if by and by not in df.columns:
+        raise RuntimeError(
+            f"stratum column {by!r} not in corpus columns {df.columns} "
+            "— annotate/split the export first"
+        )
     keep = keep_expr("canon_url", rate, by=by, rates=rates, salt=salt)
 
     obs = Observation()
@@ -135,30 +119,24 @@ def sample_corpus(
         m = F.col(by) == v
         stats.append(F.sum(m.cast("long")).alias(f"in_{v}"))
         stats.append(F.sum((m & keep).cast("long")).alias(f"out_{v}"))
-    result = df.observe(obs, *stats).where(keep)
-    result.repartition(F.col("pk")).write.mode("overwrite").partitionBy(
-        "pk"
-    ).parquet(out_path)
+    _write_product(df.observe(obs, *stats).where(keep), out_path)
     got = obs.get
     rows_in, rows_out = int(got["rows_in"]), int(got["rows_out"] or 0)
     by_stratum = {
         v: {"rows_in": int(got[f"in_{v}"] or 0), "rows_out": int(got[f"out_{v}"] or 0)}
         for v in strata
     }
-    _write_export_manifest(
+    _write_product_manifest(
         out_path,
-        {
-            "through_round": int(src["through_round"]),
-            "num_buckets": int(src["num_buckets"]),
-            "rows": rows_out,
-            "sampled_from": corpus_path,
-            "rate": rate,
-            "by": by,
-            "rates": rates,
-            "salt": salt,
-            "rows_in": rows_in,
-            "by_stratum": by_stratum,
-        },
+        src,
+        rows_out,
+        sampled_from=corpus_path,
+        rate=rate,
+        by=by,
+        rates=rates,
+        salt=salt,
+        rows_in=rows_in,
+        by_stratum=by_stratum,
     )
     return {
         "rows_in": rows_in,

@@ -120,26 +120,12 @@ def shard_corpus(
     extendable corpus).
     """
     from indigo_crawler_spark.plans.export import (
-        _pk_dir,
-        _read_export_manifest,
-        _write_export_manifest,
+        _read_source,
+        _write_product,
+        _write_product_manifest,
     )
 
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    import os
-
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to shard"
-        )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
+    src, df = _read_source(spark, corpus_path, "shard")
     if "n_words" not in df.columns:
         from indigo_crawler_spark.functions.text_analysis import (
             whitespace_token_count,
@@ -161,26 +147,21 @@ def shard_corpus(
                 "tokens"
             ),
         )
-        packed.repartition(F.col("shard_id")).write.mode("overwrite").partitionBy(
-            "shard_id"
-        ).parquet(out_path)
+        _write_product(packed, out_path, by="shard_id")
         got = obs.get
         rows = int(got["rows"])
         n_shards = int(got["last_shard"]) + 1 if rows else 0
         tokens = int(got["tokens"] or 0)
     finally:
         cached.unpersist()
-    _write_export_manifest(
+    _write_product_manifest(
         out_path,
-        {
-            "through_round": int(src["through_round"]),
-            "num_buckets": int(src["num_buckets"]),
-            "rows": rows,
-            "sharded_from": corpus_path,
-            "shard_tokens": int(shard_tokens),
-            "n_shards": n_shards,
-            "total_tokens": tokens,
-        },
+        src,
+        rows,
+        sharded_from=corpus_path,
+        shard_tokens=int(shard_tokens),
+        n_shards=n_shards,
+        total_tokens=tokens,
     )
     return {
         "rows": rows,

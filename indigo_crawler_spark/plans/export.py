@@ -339,6 +339,131 @@ def _split_cols(df: DataFrame) -> DataFrame:
     return df.withColumn("split_bucket", bucket).withColumn("split", split)
 
 
+def _reannotate(df: DataFrame, annotated: bool, split: bool) -> DataFrame:
+    """Add the annotation and/or split columns. Both are pure functions of
+    text/canon_url, so a stage that rewrites ``text`` recomputes them after
+    the rewrite instead of copying stale ones."""
+    if annotated:
+        df = _annotate(df)
+    if split:
+        df = _split_cols(df)
+    return df
+
+
+def _text_base(df: DataFrame) -> tuple[DataFrame, dict]:
+    """For a stage that rewrites ``text``: the source projected to the base
+    corpus schema, plus the ``annotated``/``split`` flags it carried (for
+    _reannotate and the product manifest). The projection keeps stale
+    annotations off any shuffle key and prunes the parquet read."""
+    flags = {"annotated": "text_sha" in df.columns, "split": "split" in df.columns}
+    return df.select(*CORPUS_SCHEMA.fieldNames()), flags
+
+
+def _finish_corpus(
+    df: DataFrame, annotate: bool, split: bool, targets: DataFrame | None = None
+) -> tuple[DataFrame, dict[str, Observation]]:
+    """The post-merge steps both export paths share, in order: drop noindex
+    rows, drop redirect rows, collapse canonical variants (*targets* as in
+    _collapse_canonical), then annotate and split. Returns the frame and the
+    drop counters riding its write, keyed by metric name."""
+    df, ni_obs = _drop_flagged(df, "noindex", "noindex_dropped")
+    df, rd_obs = _drop_flagged(df, "redirect", "redirects_dropped")
+    df, cc_obs = _collapse_canonical(df, targets)
+    counters = {
+        "noindex_dropped": ni_obs,
+        "redirects_dropped": rd_obs,
+        "canonical_collapsed": cc_obs,
+    }
+    return (
+        _reannotate(df, annotate, split),
+        {m: obs for m, obs in counters.items() if obs is not None},
+    )
+
+
+def _read_pk_dirs(
+    spark, corpus_path: str, dirs: list[str], schema=None
+) -> DataFrame:
+    """Partition-pruned read of the given ``pk=`` dirs of *corpus_path*:
+    basePath recovers the pk column without listing (or reading) the other
+    buckets. An explicit *schema* prunes the parquet projection to it."""
+    reader = spark.read.option("basePath", corpus_path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*dirs)
+
+
+def _pk_dirs(path: str, pks) -> list[str]:
+    """The ``pk=`` dirs of *path* among *pks* that exist."""
+    return [d for pk in pks if os.path.isdir(d := _pk_dir(path, pk))]
+
+
+# Provenance markers of the derived products (SEMANTICS.md §Corpus derived
+# products) → the product's label and the function that writes it. A dir
+# whose manifest carries any marker is not a corpus: export_corpus refuses
+# to extend it, and a report (_REPORTS) is refused as a stage's source.
+_DERIVED = {
+    "normalized_from": ("NORMALIZED", "normalize_corpus"),
+    "scrubbed_from": ("boilerplate-SCRUBBED", "scrub_corpus"),
+    "redacted_from": ("PII-REDACTED", "redact_corpus"),
+    "filtered_from": ("quality-FILTERED", "filter_corpus"),
+    "deduped_from": ("DEDUPED", "dedup_corpus"),
+    "sampled_from": ("SAMPLED", "sample_corpus"),
+    "sharded_from": ("SHARD-PACKED", "shard_corpus"),
+    "mirrored_from": ("MIRROR-REPORT", "mirror_report"),
+    "kind": ("HOST-REPORT", "host_report"),
+}
+_REPORTS = ("mirrored_from", "kind")
+
+
+def _read_source(spark, corpus_path: str, verb: str) -> tuple[dict, DataFrame]:
+    """The source read of every derived stage: the source's export manifest
+    and ONE lazy read of its ``pk=`` buckets. Refuses an un-exported dir, a
+    report (its rows are host pairs or hosts, not documents) and a dir with
+    no buckets; *verb* names the stage in the last message."""
+    src = _read_export_manifest(corpus_path)
+    if src is None:
+        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
+    for marker in _REPORTS:
+        if marker in src:
+            raise RuntimeError(
+                f"{corpus_path} holds a {_DERIVED[marker][0]} ({marker}="
+                f"{src[marker]}), not a corpus — nothing to {verb}"
+            )
+    dirs = _pk_dirs(corpus_path, range(int(src["num_buckets"])))
+    if not dirs:
+        raise RuntimeError(
+            f"corpus at {corpus_path} has no pk buckets — nothing to {verb}"
+        )
+    return src, _read_pk_dirs(spark, corpus_path, dirs)
+
+
+def _write_product(df: DataFrame, out_path: str, by: str = "pk") -> None:
+    """The layout write of every corpus product. The layout shuffle clusters
+    rows by their output partition so each ``<by>=`` dir gets ONE file
+    instead of one per upstream shuffle partition (at production shuffle
+    widths that difference is partitions × buckets small files). File size
+    per pk is governed by num_buckets — the same knob that sizes every other
+    per-bucket structure in the engine."""
+    df.repartition(F.col(by)).write.mode("overwrite").partitionBy(by).parquet(
+        out_path
+    )
+
+
+def _write_product_manifest(out_path: str, src: dict, rows: int, **fields) -> None:
+    """A derived product's manifest, written after its data: the source's
+    ``through_round`` and ``num_buckets``, the product's row count, and
+    *fields* — the ``<kind>_from`` marker plus the stage's own fields."""
+    _write_export_manifest(
+        out_path,
+        {
+            "through_round": int(src["through_round"]),
+            "num_buckets": int(src["num_buckets"]),
+            "rows": rows,
+            **fields,
+        },
+    )
+
+
 def export_corpus(
     state: CrawlState,
     out_path: str,
@@ -360,48 +485,13 @@ def export_corpus(
     # refuse-before-compute: a target that already holds a DERIVED product
     # is wrong regardless of this crawl's state
     prev = _read_export_manifest(out_path)
-    if prev is not None and "deduped_from" in prev:
-        raise RuntimeError(
-            f"{out_path} holds a DEDUPED derived product (from "
-            f"{prev['deduped_from']}) — it cannot be extended as a corpus; "
-            "re-run dedup_corpus after extending the source export"
-        )
-    if prev is not None and "filtered_from" in prev:
-        raise RuntimeError(
-            f"{out_path} holds a quality-FILTERED derived product (from "
-            f"{prev['filtered_from']}) — it cannot be extended as a corpus; "
-            "re-run filter_corpus after extending the source export"
-        )
-    if prev is not None and "scrubbed_from" in prev:
-        raise RuntimeError(
-            f"{out_path} holds a boilerplate-SCRUBBED derived product (from "
-            f"{prev['scrubbed_from']}) — it cannot be extended as a corpus; "
-            "re-run scrub_corpus after extending the source export"
-        )
-    if prev is not None and "sharded_from" in prev:
-        raise RuntimeError(
-            f"{out_path} holds a SHARD-PACKED derived product (from "
-            f"{prev['sharded_from']}) — it cannot be extended as a corpus; "
-            "re-run shard_corpus after extending the source export"
-        )
-    if prev is not None and "redacted_from" in prev:
-        raise RuntimeError(
-            f"{out_path} holds a PII-REDACTED derived product (from "
-            f"{prev['redacted_from']}) — it cannot be extended as a corpus; "
-            "re-run redact_corpus after extending the source export"
-        )
-    if prev is not None and "sampled_from" in prev:
-        raise RuntimeError(
-            f"{out_path} holds a SAMPLED derived product (from "
-            f"{prev['sampled_from']}) — it cannot be extended as a corpus; "
-            "re-run sample_corpus after extending the source export"
-        )
-    if prev is not None and "normalized_from" in prev:
-        raise RuntimeError(
-            f"{out_path} holds a NORMALIZED derived product (from "
-            f"{prev['normalized_from']}) — it cannot be extended as a corpus; "
-            "re-run normalize_corpus after extending the source export"
-        )
+    for marker, (label, producer) in _DERIVED.items():
+        if prev is not None and marker in prev:
+            raise RuntimeError(
+                f"{out_path} holds a {label} derived product ({marker}="
+                f"{prev[marker]}) — it cannot be extended as a corpus; re-run "
+                f"{producer} after extending its source instead"
+            )
 
     anchor = last_complete_round(state)
     if anchor is None:
@@ -465,22 +555,9 @@ def _export_full(
 ) -> dict:
     delta, rounds = _delta_union(state, 0, last, num_buckets)
     obs = Observation()
-    corpus = _latest_per_url(delta)
-    corpus, ni_obs = _drop_flagged(corpus, "noindex", "noindex_dropped")
-    corpus, rd_obs = _drop_flagged(corpus, "redirect", "redirects_dropped")
-    corpus, cc_obs = _collapse_canonical(corpus)
-    if annotate:
-        corpus = _annotate(corpus)
-    if split:
-        corpus = _split_cols(corpus)
+    corpus, counters = _finish_corpus(_latest_per_url(delta), annotate, split)
     corpus = corpus.observe(obs, F.count(F.lit(1)).alias("rows"))
-    # layout shuffle: cluster rows by their output partition so each pk dir
-    # gets ONE file instead of one per upstream shuffle partition (at
-    # production shuffle widths that difference is partitions × buckets
-    # small files). File size per pk is governed by num_buckets — the same
-    # knob that sizes every other per-bucket structure in the engine.
-    corpus = corpus.repartition(F.col("pk"))
-    corpus.write.mode("overwrite").partitionBy("pk").parquet(out_path)
+    _write_product(corpus, out_path)
     rows = int(obs.get["rows"])
     rows_by_pk = {
         str(pk): n
@@ -495,12 +572,8 @@ def _export_full(
         "annotated": annotate,
         "split": split,
     }
-    if ni_obs is not None:
-        payload["noindex_dropped"] = int(ni_obs.get["noindex_dropped"])
-    if rd_obs is not None:
-        payload["redirects_dropped"] = int(rd_obs.get["redirects_dropped"])
-    if cc_obs is not None:
-        payload["canonical_collapsed"] = int(cc_obs.get["canonical_collapsed"])
+    for metric, counter in counters.items():
+        payload[metric] = int(counter.get[metric])
     _write_export_manifest(out_path, payload)
     return {
         "rows": rows,
@@ -531,23 +604,13 @@ def _export_incremental(
         )
         rows_by_pk = dict(prev.get("rows_by_pk", {}))
         if affected:
-            # partition-pruned read of ONLY the buckets the delta can touch:
-            # explicit pk= dirs + basePath recovers the pk column without
-            # listing (or reading) the untouched ones
-            existing = [
-                _pk_dir(out_path, pk)
-                for pk in affected
-                if os.path.isdir(_pk_dir(out_path, pk))
-            ]
+            # partition-pruned read of ONLY the buckets the delta can touch
+            existing = _pk_dirs(out_path, affected)
             if existing:
                 # explicit base schema: parquet projection prunes any
                 # annotation columns the previous export carried — they are
                 # pure functions of text, recomputed below post-merge
-                prev_rows = (
-                    spark.read.option("basePath", out_path)
-                    .schema(CORPUS_SCHEMA)
-                    .parquet(*existing)
-                )
+                prev_rows = _read_pk_dirs(spark, out_path, existing, CORPUS_SCHEMA)
                 if "noindex" in delta.columns:
                     # an exported row is by definition not-noindex at its
                     # fetch_round (dropped rows never reach the corpus); a
@@ -566,38 +629,22 @@ def _export_incremental(
                 merged = _latest_per_url(prev_rows.unionByName(delta))
             else:
                 merged = _latest_per_url(delta)
-            merged, _ni_obs = _drop_flagged(merged, "noindex", "noindex_dropped")
-            merged, _rd_obs = _drop_flagged(
-                merged, "redirect", "redirects_dropped"
-            )
+            targets = None
             if "canonical_url" in merged.columns:
                 # canonical targets may live in buckets this extend never
                 # touches: presence = merged rows ∪ keys of the untouched
                 # live buckets (canon_url column only — parquet-pruned read)
-                other = [
-                    _pk_dir(out_path, pk)
-                    for pk in range(num_buckets)
-                    if pk not in set(affected)
-                    and os.path.isdir(_pk_dir(out_path, pk))
-                ]
-                targets = None
+                other = _pk_dirs(
+                    out_path, (pk for pk in range(num_buckets) if pk not in affected)
+                )
                 if other:
-                    targets = (
-                        spark.read.option("basePath", out_path)
-                        .schema(CORPUS_SCHEMA)
-                        .parquet(*other)
-                        .select("canon_url")
-                    )
-                merged, _cc_obs = _collapse_canonical(merged, targets)
-            if annotate:
-                merged = _annotate(merged)
-            if split:
-                merged = _split_cols(merged)
+                    targets = _read_pk_dirs(
+                        spark, out_path, other, CORPUS_SCHEMA
+                    ).select("canon_url")
+            merged, _ = _finish_corpus(merged, annotate, split, targets)
             stage = out_path.rstrip("/") + "__stage"
             shutil.rmtree(stage, ignore_errors=True)
-            merged.repartition(F.col("pk")).write.mode("overwrite").partitionBy(
-                "pk"
-            ).parquet(stage)
+            _write_product(merged, stage)
             # per-bucket swap: live → __old backup, staged → live, drop
             # backup. A crash at any point is healed by _repair_swaps and the
             # merge is idempotent on re-run (manifest still names the old
@@ -673,57 +720,26 @@ def scrub_corpus(
         remove_boilerplate_lines,
     )
 
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to scrub"
-        )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
-    annotated = "text_sha" in df.columns
-    has_split = "split" in df.columns
-    # project to the base corpus schema: keeps the reassembly groupBy key
-    # narrow (stale annotations would otherwise ride it) and prunes the
-    # parquet read to the columns the scrub actually needs
-    base = df.select(*[f.name for f in CORPUS_SCHEMA.fields])
+    src, df = _read_source(spark, corpus_path, "scrub")
+    base, flags = _text_base(df)
     counters = {"lines": Observation(), "kept": Observation(), "hot": Observation()}
     scrubbed = remove_boilerplate_lines(
         base, min_docs=min_docs, text_col="text", id_col="canon_url",
         counters=counters,
     )
-    if annotated:
-        scrubbed = _annotate(scrubbed)
-    if has_split:
-        scrubbed = _split_cols(scrubbed)
     obs = Observation()
-    scrubbed = scrubbed.observe(obs, F.count(F.lit(1)).alias("rows"))
-    scrubbed.repartition(F.col("pk")).write.mode("overwrite").partitionBy(
-        "pk"
-    ).parquet(out_path)
+    scrubbed = _reannotate(scrubbed, **flags).observe(
+        obs, F.count(F.lit(1)).alias("rows")
+    )
+    _write_product(scrubbed, out_path)
     rows = int(obs.get["rows"])
     lines_in = int(counters["lines"].get["n"])
     lines_kept = int(counters["kept"].get["n"] or 0)
     hot_lines = int(counters["hot"].get["n"] or 0)
-    _write_export_manifest(
-        out_path,
-        {
-            "through_round": int(src["through_round"]),
-            "num_buckets": int(src["num_buckets"]),
-            "rows": rows,
-            "scrubbed_from": corpus_path,
-            "min_docs": min_docs,
-            "hot_lines": hot_lines,
-            "lines_in": lines_in,
-            "lines_dropped": lines_in - lines_kept,
-            "annotated": annotated,
-            "split": has_split,
-        },
+    _write_product_manifest(
+        out_path, src, rows, scrubbed_from=corpus_path, min_docs=min_docs,
+        hot_lines=hot_lines, lines_in=lines_in,
+        lines_dropped=lines_in - lines_kept, **flags,
     )
     return {
         "rows": rows,
@@ -765,19 +781,7 @@ def dedup_corpus(
     absent); writes parquet partitioned by pk plus a manifest with the row
     counts. Returns ``{"rows_in", "rows_out", "out_path"}`` (+
     ``near_dropped`` in near mode)."""
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to dedup"
-        )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
+    src, df = _read_source(spark, corpus_path, "dedup")
     if "text_sha" not in df.columns:
         df = df.withColumn("text_sha", F.sha2(F.col("text"), 256))
     others = [c for c in df.columns if c != "text_sha"]
@@ -814,23 +818,16 @@ def dedup_corpus(
     else:
         result = deduped
     result = result.observe(obs_out, F.count(F.lit(1)).alias("rows"))
-    result.repartition(F.col("pk")).write.mode("overwrite").partitionBy(
-        "pk"
-    ).parquet(out_path)
+    _write_product(result, out_path)
     rows_in, rows_out = int(obs_in.get["rows"]), int(obs_out.get["rows"])
-    payload = {
-        "through_round": int(src["through_round"]),
-        "num_buckets": int(src["num_buckets"]),
-        "rows": rows_out,
-        "deduped_from": corpus_path,
-        "rows_in": rows_in,
-    }
     out = {"rows_in": rows_in, "rows_out": rows_out, "out_path": out_path}
+    near = {}
     if near_threshold is not None:
-        payload["near_threshold"] = near_threshold
-        payload["near_dropped"] = near_exact - rows_out
         out["near_dropped"] = near_exact - rows_out
-    _write_export_manifest(out_path, payload)
+        near = {"near_threshold": near_threshold, "near_dropped": out["near_dropped"]}
+    _write_product_manifest(
+        out_path, src, rows_out, deduped_from=corpus_path, rows_in=rows_in, **near
+    )
     return out
 
 
@@ -855,22 +852,8 @@ def normalize_corpus(
     "out_path"}``."""
     from indigo_crawler_spark.functions.udfs import normalize_text_udf
 
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to normalize"
-        )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
-    annotated = "text_sha" in df.columns
-    has_split = "split" in df.columns
-    base = df.select(*[f.name for f in CORPUS_SCHEMA.fields])
+    src, df = _read_source(spark, corpus_path, "normalize")
+    base, flags = _text_base(df)
     normalized = base.withColumn("_norm", normalize_text_udf(F.col("text")))
     obs = Observation()
     normalized = normalized.observe(
@@ -881,26 +864,12 @@ def normalize_corpus(
         ).alias("changed"),
     )
     normalized = normalized.withColumn("text", F.col("_norm")).drop("_norm")
-    if annotated:
-        normalized = _annotate(normalized)
-    if has_split:
-        normalized = _split_cols(normalized)
-    normalized.repartition(F.col("pk")).write.mode("overwrite").partitionBy(
-        "pk"
-    ).parquet(out_path)
+    _write_product(_reannotate(normalized, **flags), out_path)
     got = obs.get
     rows, changed = int(got["rows"]), int(got["changed"] or 0)
-    _write_export_manifest(
-        out_path,
-        {
-            "through_round": int(src["through_round"]),
-            "num_buckets": int(src["num_buckets"]),
-            "rows": rows,
-            "normalized_from": corpus_path,
-            "rows_changed": changed,
-            "annotated": annotated,
-            "split": has_split,
-        },
+    _write_product_manifest(
+        out_path, src, rows, normalized_from=corpus_path, rows_changed=changed,
+        **flags,
     )
     return {"rows": rows, "rows_changed": changed, "out_path": out_path}
 
@@ -926,22 +895,8 @@ def redact_corpus(
     "matches_by_kind", "out_path"}``."""
     from indigo_crawler_spark.functions.pii import PII_ORDER, pii_exprs, redact_pii
 
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to redact"
-        )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
-    annotated = "text_sha" in df.columns
-    has_split = "split" in df.columns
-    base = df.select(*[f.name for f in CORPUS_SCHEMA.fields])
+    src, df = _read_source(spark, corpus_path, "redact")
+    base, flags = _text_base(df)
     obs = Observation()
     counts = pii_exprs(F.col("text"))
     base = base.observe(
@@ -953,27 +908,13 @@ def redact_corpus(
         ],
     )
     redacted = base.withColumn("text", redact_pii(F.col("text")))
-    if annotated:
-        redacted = _annotate(redacted)
-    if has_split:
-        redacted = _split_cols(redacted)
-    redacted.repartition(F.col("pk")).write.mode("overwrite").partitionBy(
-        "pk"
-    ).parquet(out_path)
+    _write_product(_reannotate(redacted, **flags), out_path)
     got = obs.get
     rows = int(got["rows"])
     matches = {k: int(got[k] or 0) for k in PII_ORDER}
-    _write_export_manifest(
-        out_path,
-        {
-            "through_round": int(src["through_round"]),
-            "num_buckets": int(src["num_buckets"]),
-            "rows": rows,
-            "redacted_from": corpus_path,
-            "matches_by_kind": matches,
-            "annotated": annotated,
-            "split": has_split,
-        },
+    _write_product_manifest(
+        out_path, src, rows, redacted_from=corpus_path, matches_by_kind=matches,
+        **flags,
     )
     return {"rows": rows, "matches_by_kind": matches, "out_path": out_path}
 
@@ -1015,19 +956,7 @@ def filter_corpus(
     per-reason drop counts ride ONE observe on the read (conditional sums,
     non-exclusive), not extra count jobs.
     """
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to filter"
-        )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
+    src, df = _read_source(spark, corpus_path, "filter")
     if "n_words" not in df.columns:
         df = _annotate(df)
 
@@ -1070,29 +999,25 @@ def filter_corpus(
              F.sum(keep.cast("long")).alias("rows_out")]
     for name, pred in checks:
         stats.append(F.sum((~pred).cast("long")).alias(f"dropped_{name}"))
-    result = df.observe(obs, *stats).where(keep)
-    result.repartition(F.col("pk")).write.mode("overwrite").partitionBy(
-        "pk"
-    ).parquet(out_path)
+    _write_product(df.observe(obs, *stats).where(keep), out_path)
     got = obs.get
     rows_in, rows_out = int(got["rows_in"]), int(got["rows_out"] or 0)
     dropped = {name: int(got[f"dropped_{name}"] or 0) for name, _ in checks}
-    payload = {
-        "through_round": int(src["through_round"]),
-        "num_buckets": int(src["num_buckets"]),
-        "rows": rows_out,
-        "filtered_from": corpus_path,
-        "rows_in": rows_in,
-        "filters": {
+    _write_product_manifest(
+        out_path,
+        src,
+        rows_out,
+        filtered_from=corpus_path,
+        rows_in=rows_in,
+        filters={
             "min_words": min_words,
             "max_punct_ratio": max_punct_ratio,
             "langs": sorted(langs) if langs else None,
             "max_dup_word_ratio": max_dup_word_ratio,
             "max_pii": max_pii,
         },
-        "dropped_by_reason": dropped,
-    }
-    _write_export_manifest(out_path, payload)
+        dropped_by_reason=dropped,
+    )
     return {
         "rows_in": rows_in,
         "rows_out": rows_out,
@@ -1129,19 +1054,7 @@ def mirror_report(
     """
     from indigo_crawler_spark.operators.mirrors import mirror_pairs
 
-    src = _read_export_manifest(corpus_path)
-    if src is None:
-        raise RuntimeError(f"no export manifest at {corpus_path} — export first")
-    dirs = [
-        _pk_dir(corpus_path, pk)
-        for pk in range(int(src["num_buckets"]))
-        if os.path.isdir(_pk_dir(corpus_path, pk))
-    ]
-    if not dirs:
-        raise RuntimeError(
-            f"corpus at {corpus_path} has no pk buckets — nothing to report"
-        )
-    df = spark.read.option("basePath", corpus_path).parquet(*dirs)
+    src, df = _read_source(spark, corpus_path, "report")
     if "text_sha" not in df.columns:
         df = df.withColumn("text_sha", F.sha2(F.col("text"), 256))
     d = df.select(
@@ -1159,19 +1072,18 @@ def mirror_report(
     n_hosts = got.select(
         F.explode(F.array("host_a", "host_b")).alias("h")
     ).distinct().count()
-    payload = {
-        "through_round": int(src["through_round"]),
-        "num_buckets": int(src["num_buckets"]),
-        "rows": n_pairs,
-        "mirrored_from": corpus_path,
-        "mirror_hosts": n_hosts,
-        "knobs": {
+    _write_product_manifest(
+        out_path,
+        src,
+        n_pairs,
+        mirrored_from=corpus_path,
+        mirror_hosts=n_hosts,
+        knobs={
             "min_overlap_pct": int(min_overlap_pct),
             "min_shared": int(min_shared),
             "max_hosts_per_sha": int(max_hosts_per_sha),
         },
-    }
-    _write_export_manifest(out_path, payload)
+    )
     return {"pairs": n_pairs, "hosts": n_hosts, "out_path": out_path}
 
 

@@ -77,46 +77,33 @@ def _obs_int(obs: Observation, name: str) -> int:
     return int(v) if v is not None else 0
 
 
-def _rank_single_max() -> int:
-    """Frontier-row bound below which the round ranks in ONE gathered
-    partition (no range-bounds sampling job) instead of the distributed
-    range-partitioned ranker. ~200k rows sort in well under a second in a
-    single task; the collect/offsets machinery is unchanged and ranks are
-    identical (operators/politeness.global_rank). Physical knob only."""
-    import os
+# Frontier-row bound below which the round ranks in ONE gathered partition
+# (no range-bounds sampling job) instead of the distributed range-partitioned
+# ranker. ~200k rows sort in well under a second in a single task; the
+# collect/offsets machinery is unchanged and ranks are identical
+# (operators/politeness.global_rank). Physical knob only.
+_RANK_SINGLE_MAX = 200_000
 
-    return int(os.environ.get("SPARK_GRAFT_RANK_SINGLE_MAX", "200000"))
+# Reduce-partition count for SMALL rounds (the same manifest-derived
+# ``rank_single`` marker that drives the AQE policy): a round whose committed
+# frontier bound is ≤ _RANK_SINGLE_MAX rows needs a handful of reduce
+# partitions, not the session default sized for at-scale rounds — every
+# extra near-empty task is pure scheduling overhead on the round's many small
+# shuffles, and every extra shuffle partition becomes one more near-empty
+# file under the frontier write. Scale-adaptive, not machine-tuned: the
+# trigger is the committed row bound, the at-scale default is untouched, and
+# every operator is partition-count-independent by construction (content-XOR
+# digests, min_by dedups, offset-based ranks — SEMANTICS.md determinism
+# rules), so results are identical at any value.
+_SMALL_ROUND_SHUFFLE = 8
 
-
-def _small_round_shuffle() -> int:
-    """Reduce-partition count for SMALL rounds (the same manifest-derived
-    ``rank_single`` marker that drives the AQE policy): a round whose
-    committed frontier bound is ≤ ``SPARK_GRAFT_RANK_SINGLE_MAX`` rows
-    needs a handful of reduce partitions, not the session default sized
-    for at-scale rounds — every extra near-empty task is pure scheduling
-    overhead on the round's many small shuffles, and every extra shuffle
-    partition becomes one more near-empty file under the frontier write.
-    Scale-adaptive, not machine-tuned: the trigger is the committed row
-    bound, the at-scale default is untouched, and every operator is
-    partition-count-independent by construction (content-XOR digests,
-    min_by dedups, offset-based ranks — SEMANTICS.md determinism rules),
-    so results are identical at any value. 0 disables.
-    (``SPARK_GRAFT_SMALL_ROUND_SHUFFLE`` overrides for measurement.)"""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_SMALL_ROUND_SHUFFLE", "8"))
-
-
-def _dim_broadcast_max() -> int:
-    """Host-dimension row bound below which the robots / host_counts joins
-    broadcast the dimension instead of SHUFFLE_HASH. robots carries text
-    blobs, so the bound is conservative (~100k hosts ≈ tens of MB built);
-    beyond it the shuffle-hash plan — which parallelizes the build and
-    never sorts the blobs — remains the at-scale default. Physical knob
-    only; read once per round from the bootstrap manifest, never counted."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_DIM_BROADCAST_MAX", "100000"))
+# Host-dimension row bound below which the robots / host_counts joins
+# broadcast the dimension instead of SHUFFLE_HASH. robots carries text blobs,
+# so the bound is conservative (~100k hosts ≈ tens of MB built); beyond it
+# the shuffle-hash plan — which parallelizes the build and never sorts the
+# blobs — remains the at-scale default. Physical knob only; read once per
+# round from the bootstrap manifest, never counted.
+_DIM_BROADCAST_MAX = 100_000
 
 
 # Process-level cache for the round's STATIC Column expression trees (r6):
@@ -205,14 +192,11 @@ def _gate_exprs() -> dict:
     return cached
 
 
-def _probe_min_seen() -> int:
-    """Committed-seen row count below which the round's discovery skips the
-    membership-filter probe and anti-joins children against the seen table
-    directly (results identical; see the discovery comment in run_round).
-    Physical knob only — env-overridable for measurement."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PROBE_MIN_SEEN", "5000000"))
+# Committed-seen row count below which the round's discovery skips the
+# membership-filter probe and anti-joins children against the seen table
+# directly (results identical; see the discovery comment in run_round).
+# Physical knob only.
+_PROBE_MIN_SEEN = 5_000_000
 
 
 def _timer():
@@ -1020,7 +1004,7 @@ def run_round(
     # seeds (rows uncounted), falls back to the at-scale plans.
     bm = io.read_manifest("bootstrap") or {}
     n_hosts = bm.get("n_hosts")
-    small_host_dim = n_hosts is not None and n_hosts <= _dim_broadcast_max()
+    small_host_dim = n_hosts is not None and n_hosts <= _DIM_BROADCAST_MAX
     if round_no == 0:
         rank_bound = bm.get("frontier_rows")
     else:
@@ -1030,7 +1014,7 @@ def run_round(
         )
     if io.exists(f"injected/round={round_no}"):
         rank_bound = None
-    rank_single = rank_bound is not None and rank_bound <= _rank_single_max()
+    rank_single = rank_bound is not None and rank_bound <= _RANK_SINGLE_MAX
     # Small rounds run ENTIRELY without AQE (r6): every shape in a
     # small-frontier round is fixed and explicitly planned (hinted joins,
     # bounded top-K, coalesced writes), so adaptive re-planning only
@@ -1045,11 +1029,11 @@ def run_round(
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         # small rounds also shrink the reduce-partition count (r6 second
         # pass — guide §2.2 fewer/larger partitions, §6 small files): see
-        # _small_round_shuffle. Restored with AQE when the round ends.
-        nshuf = _small_round_shuffle()
-        if nshuf > 0:
-            _shuf_prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-            spark.conf.set("spark.sql.shuffle.partitions", str(nshuf))
+        # _SMALL_ROUND_SHUFFLE. Restored with AQE when the round ends; the
+        # effective value is read, so a session that never set the key gets
+        # its default back too.
+        _shuf_prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(_SMALL_ROUND_SHUFFLE))
     gx = _gate_exprs()
     gate_obs = Observation()
     gated = (
@@ -1708,14 +1692,13 @@ def run_round(
         # are path-independent); results are identical by the
         # no-false-negative property. Threshold: the probe pays off once
         # scanning+shuffling the seen table dwarfs two fixed Python-stage
-        # launches — ~5M rows is conservative on any hardware
-        # (SPARK_GRAFT_PROBE_MIN_SEEN overrides for measurement).
+        # launches — ~5M rows is conservative on any hardware.
         frontier_not_denied = allowed_rows.select("canon_url")
         use_probe = (
             cfg.filter_kind in ("bloom", "cuckoo")
             and round_no > 0
             and io.exists(prev_filter)
-            and state.seen_rows_committed(round_no) >= _probe_min_seen()
+            and state.seen_rows_committed(round_no) >= _PROBE_MIN_SEEN
         )
         if use_probe:
             children_h = children.withColumn(

@@ -583,3 +583,74 @@ def test_filter_dup_word_ratio_gate(spark, tmp_path):
     got = {r["canon_url"] for r in spark.read.parquet(out).collect()}
     assert got == want
     assert rep["dropped_by_reason"] == {"max_dup_word_ratio": 1}
+
+
+@pytest.fixture(scope="module")
+def crawled_export(spark, tmp_path_factory):
+    """One committed round of TINY and its annotated, split export."""
+    root = tmp_path_factory.mktemp("derived")
+    cfg = CrawlConfig(round_limit=50, num_buckets=16, bloom_bucket_capacity=64)
+    fb = fixture_bundle(**TINY)
+    state = CrawlState(io=TableIO(spark, str(root / "crawl")), cfg=cfg)
+    bootstrap(
+        spark,
+        pages_df(spark, fb["pages"]),
+        seeds_df(spark, fb["seeds"]),
+        robots_df(spark, fb["robots"]),
+        budgets_df(spark, fb["host_budgets"]),
+        state,
+    )
+    run_rounds(spark, state, 1)
+    corpus = str(root / "corpus")
+    export_corpus(state, corpus, annotate=True, split=True)
+    return state, corpus, root
+
+
+def _make_product(spark, kind, state, corpus, out):
+    from indigo_crawler_spark.operators.sampling import sample_corpus
+    from indigo_crawler_spark.operators.sharding import shard_corpus
+    from indigo_crawler_spark.plans import export
+
+    make = {
+        "normalize": lambda: export.normalize_corpus(spark, corpus, out),
+        # min_docs=2: a one-round corpus has no line in 10 documents
+        "scrub": lambda: export.scrub_corpus(spark, corpus, out, min_docs=2),
+        "redact": lambda: export.redact_corpus(spark, corpus, out),
+        "filter": lambda: export.filter_corpus(spark, corpus, out),
+        "dedup": lambda: export.dedup_corpus(spark, corpus, out),
+        "sample": lambda: sample_corpus(spark, corpus, out, rate=1.0),
+        "shards": lambda: shard_corpus(spark, corpus, out, shard_tokens=1000),
+        "mirror": lambda: export.mirror_report(spark, corpus, out),
+        "host": lambda: export.host_report(state, out),
+    }
+    return make[kind]()
+
+
+@pytest.mark.parametrize(
+    "kind, label",
+    [
+        ("normalize", "NORMALIZED"),
+        ("scrub", "SCRUBBED"),
+        ("redact", "REDACTED"),
+        ("filter", "FILTERED"),
+        ("dedup", "DEDUPED"),
+        ("sample", "SAMPLED"),
+        ("shards", "SHARD"),
+        ("mirror", "MIRROR"),
+        ("host", "HOST"),
+    ],
+)
+def test_derived_product_refuses_extension(spark, crawled_export, kind, label):
+    """SEMANTICS.md §Corpus derived products: a dir holding ANY derived
+    product refuses extension as a corpus — the two reports included (a
+    mirror report used to be extended as a partial corpus, a host report
+    crashed on its missing num_buckets). A report is refused as a derived
+    stage's source too."""
+    state, corpus, root = crawled_export
+    out = str(root / kind)
+    _make_product(spark, kind, state, corpus, out)
+    with pytest.raises(RuntimeError, match=label):
+        export_corpus(state, out)
+    if kind in ("mirror", "host"):
+        with pytest.raises(RuntimeError, match="not a corpus"):
+            _make_product(spark, "normalize", state, out, str(root / f"{kind}_src"))

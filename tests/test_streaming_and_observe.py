@@ -1,4 +1,4 @@
-"""T1 — streaming skin (foreachBatch reusing the batch round) + observe counters."""
+"""T1 — streaming skin (foreachBatch reusing the batch round)."""
 
 from __future__ import annotations
 
@@ -17,19 +17,6 @@ from indigo_crawler_spark.sources.fixture_df import (
     seeds_df,
 )
 from indigo_crawler_spark.sources.table_io import TableIO
-
-
-def test_observed_write_single_pass(spark, tmp_path):
-    from indigo_crawler_spark.operators.observe import observed_write
-
-    df = spark.range(100).withColumn("v", F.col("id") % 5)
-    got = observed_write(
-        df,
-        lambda d: d.write.mode("overwrite").parquet(str(tmp_path / "t")),
-        {"rows": F.count(F.lit(1)), "sum_v": F.sum("v")},
-    )
-    assert got == {"rows": 100, "sum_v": 200}
-    assert spark.read.parquet(str(tmp_path / "t")).count() == 100
 
 
 def test_streamed_pages_become_fetchable(spark, tmp_path):

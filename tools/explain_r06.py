@@ -97,12 +97,12 @@ def main(tag: str) -> None:
             & ~F.col("_ext") & ~F.col("_hostdrop") & ~F.col("_capped")
             & ~F.col("_backoff")
         )
-        from indigo_crawler_spark.plans.round import _rank_single_max
+        from indigo_crawler_spark.plans.round import _RANK_SINGLE_MAX
 
         bm = state.io.read_manifest("bootstrap") or {}
         rank_single = (
             bm.get("frontier_rows") is not None
-            and bm.get("frontier_rows") <= _rank_single_max()
+            and bm.get("frontier_rows") <= _RANK_SINGLE_MAX
         )
         kept = politeness_topk_skew_aware(eligible, cfg, state.heavy_hosts(0))
         emitted, _n, _pks, rank_cache = sequence_batches(
@@ -157,12 +157,12 @@ def main(tag: str) -> None:
             & ~F.col("_ext") & ~F.col("_hostdrop") & ~F.col("_capped")
         )
         frontier_not_denied = allowed_rows.select("canon_url")
-        from indigo_crawler_spark.plans.round import _probe_min_seen
+        from indigo_crawler_spark.plans.round import _PROBE_MIN_SEEN
 
         use_probe = (
             cfg.filter_kind == "bloom"
             and state.io.exists(prev_filter)
-            and state.seen_rows_committed(2) >= _probe_min_seen()
+            and state.seen_rows_committed(2) >= _PROBE_MIN_SEEN
         )
         if use_probe:
             from indigo_crawler_spark.functions.keys import url_hash_expr
@@ -196,11 +196,11 @@ def main(tag: str) -> None:
         from indigo_crawler_spark.functions.scoring import priority_expr
 
         n_hosts = (state.io.read_manifest("bootstrap") or {}).get("n_hosts")
-        from indigo_crawler_spark.plans.round import _dim_broadcast_max
+        from indigo_crawler_spark.plans.round import _DIM_BROADCAST_MAX
 
         hc_side = (
             F.broadcast(hc)
-            if n_hosts is not None and n_hosts <= _dim_broadcast_max()
+            if n_hosts is not None and n_hosts <= _DIM_BROADCAST_MAX
             else hc.hint("SHUFFLE_HASH")
         )
         children_full = (
