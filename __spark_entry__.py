@@ -143,7 +143,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # without it at sf0.1 AND sf1.0; results are identical by construction
     # — AQE never changes semantics). The crawl queries manage AQE
     # themselves per round scale (plans/round.py), so they are unaffected
-    # by the session-level setting this leaves behind.
+    # by the session-level setting this leaves behind. No session_conf
+    # scope fits here: _t returns a lazy frame that the caller executes
+    # after _t has returned, so a scope closed inside _t would not cover
+    # the execution.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
@@ -1523,14 +1526,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- tracking-parameter stripping (SEMANTICS.md §Tracking params) ----
     def _strip_tracking(s, d):
         """The REAL strip-tracking canonicalization (functions/udfs.
-        make_canonicalize_udf(True) → kernels/canonicalize.
-        strip_tracking_params) over urls whose query cycles through 6
-        cases by doc_id — tracked+real mix, tracked-only (the '?' must
-        drop), tracked between real survivors, no query, mixed-case
-        tracked key, and a %-escaped key that must SURVIVE (keys compare
-        raw bytes). DuckDB re-derives the strip independently with its
+        make_canonicalize_udf(CanonPolicy(strip_tracking=True)) →
+        kernels/canonicalize.strip_tracking_params) over urls whose query
+        cycles through 6 cases by doc_id — tracked+real mix, tracked-only
+        (the '?' must drop), tracked between real survivors, no query,
+        mixed-case tracked key, and a %-escaped key that must SURVIVE (keys
+        compare raw bytes). DuckDB re-derives the strip independently with its
         list functions over the same token grammar."""
         from indigo_crawler_spark.functions.udfs import make_canonicalize_udf
+        from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
 
         docs = _t(s, d, "documents")
         base = F.concat(
@@ -1560,7 +1564,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return docs.select(
             url.alias("url"),
-            make_canonicalize_udf(True)(url).alias("stripped"),
+            make_canonicalize_udf(CanonPolicy(strip_tracking=True))(url).alias(
+                "stripped"
+            ),
         )
 
     # ---- exclude-pattern gate (SEMANTICS.md §Exclude patterns) ----
@@ -1747,6 +1753,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         is the host-label drop; DuckDB re-derives it with a recursive CTE
         applying the same one-label-while-remainder-has-a-dot step."""
         from indigo_crawler_spark.functions.udfs import make_canonicalize_udf
+        from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
 
         docs = _t(s, d, "documents")
         k = (F.col("doc_id") % 13).cast("string")
@@ -1767,7 +1774,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return docs.select(
             "doc_id",
             url.alias("url"),
-            make_canonicalize_udf(False, True)(url).alias("collapsed"),
+            make_canonicalize_udf(CanonPolicy(collapse_www=True))(url).alias(
+                "collapsed"
+            ),
         )
 
     def _sort_query(s, d):
@@ -1781,6 +1790,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         token order; DuckDB re-derives it with
         array_to_string(list_sort(string_split(...)))."""
         from indigo_crawler_spark.functions.udfs import make_canonicalize_udf
+        from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
 
         docs = _t(s, d, "documents")
         k = (F.col("doc_id") % 13).cast("string")
@@ -1806,7 +1816,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return docs.select(
             "doc_id",
             url.alias("url"),
-            make_canonicalize_udf(False, False, True)(url).alias("sorted_url"),
+            make_canonicalize_udf(CanonPolicy(sort_query=True))(url).alias(
+                "sorted_url"
+            ),
         )
 
     def _strip_session(s, d):
@@ -1820,6 +1832,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         clean url (byte-identical). DuckDB re-derives both carriers with
         list/regexp functions over the same token grammars."""
         from indigo_crawler_spark.functions.udfs import make_canonicalize_udf
+        from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
 
         docs = _t(s, d, "documents")
         k = (F.col("doc_id") % 13).cast("string")
@@ -1838,7 +1851,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return docs.select(
             "doc_id",
             url.alias("url"),
-            make_canonicalize_udf(False, False, False, True)(url).alias(
+            make_canonicalize_udf(CanonPolicy(strip_session=True))(url).alias(
                 "stripped_url"
             ),
         )
@@ -1853,6 +1866,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         are canonical-form, so the only change is the scheme prefix;
         DuckDB re-derives it with a prefix regexp_replace."""
         from indigo_crawler_spark.functions.udfs import make_canonicalize_udf
+        from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
 
         docs = _t(s, d, "documents")
         k = (F.col("doc_id") % 13).cast("string")
@@ -1869,7 +1883,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return docs.select(
             "doc_id",
             url.alias("url"),
-            make_canonicalize_udf(False, False, False, False, True)(url).alias(
+            make_canonicalize_udf(CanonPolicy(prefer_https=True))(url).alias(
                 "upgraded_url"
             ),
         )
@@ -1885,6 +1899,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         /a/default.aspx (drops). DuckDB re-derives the drop with a
         case-insensitive trailing-segment regexp_replace."""
         from indigo_crawler_spark.functions.udfs import make_canonicalize_udf
+        from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
 
         docs = _t(s, d, "documents")
         k = (F.col("doc_id") % 13).cast("string")
@@ -1903,9 +1918,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return docs.select(
             "doc_id",
             url.alias("url"),
-            make_canonicalize_udf(False, False, False, False, False, True)(
-                url
-            ).alias("collapsed_url"),
+            make_canonicalize_udf(CanonPolicy(collapse_index=True))(url).alias(
+                "collapsed_url"
+            ),
         )
 
     q["prefer_https"] = _prefer_https

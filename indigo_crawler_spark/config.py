@@ -10,6 +10,8 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass
 
+from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
+
 
 @dataclass(frozen=True)
 class CrawlConfig:
@@ -354,6 +356,19 @@ class CrawlConfig:
                     "not '.pdf' or 'tar.gz'; multi-dot suffixes match on "
                     "their final segment, so use 'gz')"
                 )
+
+    @property
+    def canon_policy(self) -> CanonPolicy:
+        """The six canonicalization knobs as the one value every layer above
+        the kernel passes along (a property, so never hashed or persisted)."""
+        return CanonPolicy(
+            strip_tracking=self.strip_tracking_enabled,
+            collapse_www=self.collapse_www_enabled,
+            sort_query=self.sort_query_enabled,
+            strip_session=self.strip_session_enabled,
+            prefer_https=self.prefer_https_enabled,
+            collapse_index=self.collapse_index_enabled,
+        )
 
     # capacity is excluded from config_hash: it is pinned PER CRAWL by the
     # bootstrap manifest (bootstrap records the override or the A3-derived

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, DoubleType, StringType
 
-from indigo_crawler_spark.kernels.canonicalize import canonicalize_url
+from indigo_crawler_spark.kernels.canonicalize import CanonPolicy, canonicalize_url
 from indigo_crawler_spark.kernels.robots import (
     crawl_delay,
     robots_allowed,
@@ -63,48 +63,24 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
 
 
 @functools.lru_cache(maxsize=64)
-def make_canonicalize_udf(
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
-):
-    """pandas_udf canonicalizing with the six cfg canonicalization-policy
-    flags threaded — SEMANTICS.md §Tracking parameters / §WWW collapse /
+def make_canonicalize_udf(policy: CanonPolicy = CanonPolicy()):
+    """pandas_udf canonicalizing under *policy* (cfg.canon_policy) — the six
+    URL-alias rules of SEMANTICS.md §Tracking parameters / §WWW collapse /
     §Sorted query / §Session identifiers / §HTTPS preference / §Index
     collapse.
-    Flags-off returns the module-level ``canonicalize_udf`` instance
-    itself, so default-path plans are object-identical to pre-knob plans
-    (no new UDF registration)."""
-    if not (
-        strip_tracking
-        or collapse_www
-        or sort_query
-        or strip_session
-        or prefer_https
-        or collapse_index
-    ):
+    The all-off policy returns the module-level ``canonicalize_udf``
+    instance itself, so default-path plans are object-identical to pre-knob
+    plans (no new UDF registration)."""
+    if not any(policy):
         return canonicalize_udf
 
     @F.pandas_udf(StringType())
-    def _canonicalize_flags(urls: pd.Series) -> pd.Series:
+    def _canonicalize_policy(urls: pd.Series) -> pd.Series:
         return urls.map(
-            lambda u: canonicalize_url(
-                u,
-                strip_tracking,
-                collapse_www,
-                sort_query,
-                strip_session,
-                prefer_https,
-                collapse_index,
-            )
-            if isinstance(u, str)
-            else None
+            lambda u: canonicalize_url(u, *policy) if isinstance(u, str) else None
         )
 
-    return _canonicalize_flags
+    return _canonicalize_policy
 
 
 @functools.lru_cache(maxsize=32)

@@ -8,6 +8,7 @@ byte-for-byte.
 
 from __future__ import annotations
 
+from typing import NamedTuple
 from urllib.parse import urlsplit
 
 _UNRESERVED = frozenset(
@@ -262,6 +263,20 @@ def collapse_www_host(host: str) -> str:
     while host.startswith("www.") and "." in host[4:]:
         host = host[4:]
     return host
+
+
+class CanonPolicy(NamedTuple):
+    """The six URL-alias rules as one value — ``CrawlConfig.canon_policy``
+    builds it from the cfg knobs, and every caller above this kernel passes
+    it along whole. Field order is ``canonicalize_url``'s parameter order,
+    so ``canonicalize_url(url, *policy)`` applies it. All off by default."""
+
+    strip_tracking: bool = False
+    collapse_www: bool = False
+    sort_query: bool = False
+    strip_session: bool = False
+    prefer_https: bool = False
+    collapse_index: bool = False
 
 
 def canonicalize_url(

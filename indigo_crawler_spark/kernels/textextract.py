@@ -11,7 +11,7 @@ from __future__ import annotations
 from html.parser import HTMLParser
 from urllib.parse import urljoin
 
-from indigo_crawler_spark.kernels.canonicalize import canonicalize_url
+from indigo_crawler_spark.kernels.canonicalize import CanonPolicy, canonicalize_url
 
 _SKIP_TAGS = frozenset(("script", "style", "noscript", "template"))
 _BLOCK_TAGS = frozenset(
@@ -248,12 +248,7 @@ def _effective_base(p: _Extractor, base_url: str | None) -> str | None:
 def _canon_links(
     hrefs: list[str],
     base_url: str | None,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> list[str]:
     links: list[str] = []
     for href in hrefs:
@@ -264,14 +259,7 @@ def _canon_links(
             absu = urljoin(base_url or "", h)
         except ValueError:
             continue
-        c = canonicalize_url(absu,
-        strip_tracking,
-        collapse_www,
-        sort_query,
-        strip_session,
-        prefer_https,
-        collapse_index,
-    )
+        c = canonicalize_url(absu, *policy)
         if c is not None:
             links.append(c)
     return links
@@ -291,12 +279,7 @@ def _canon_links_rels(
     hrefs: list[str],
     rels: list[str | None],
     base_url: str | None,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> tuple[list[str], int]:
     """The anchor-nofollow variant of ``_canon_links``: returns
     (kept links, dropped count). Dropped counts ONLY anchors that would
@@ -313,14 +296,7 @@ def _canon_links_rels(
             absu = urljoin(base_url or "", h)
         except ValueError:
             continue
-        c = canonicalize_url(absu,
-        strip_tracking,
-        collapse_www,
-        sort_query,
-        strip_session,
-        prefer_https,
-        collapse_index,
-    )
+        c = canonicalize_url(absu, *policy)
         if c is None:
             continue
         if anchor_rel_nofollow(rel):
@@ -334,12 +310,7 @@ def extract_text_and_links(
     html: bytes | str | None,
     base_url: str | None,
     sitemap_aware: bool = False,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> tuple[str, list[str]]:
     """Parse *html* once; return (visible_text, canonical out-links in order).
 
@@ -363,37 +334,16 @@ def extract_text_and_links(
 
         doc = _decode(html)
         if looks_like_sitemap(doc):
-            return "", _canon_links(
-                sitemap_locs(doc), base_url,
-            strip_tracking,
-            collapse_www,
-            sort_query,
-            strip_session,
-            prefer_https,
-            collapse_index,
-            )
+            return "", _canon_links(sitemap_locs(doc), base_url, policy)
     p = _parse(html)
-    return p.text(), _canon_links(
-        p.hrefs, _effective_base(p, base_url),
-            strip_tracking,
-            collapse_www,
-            sort_query,
-            strip_session,
-            prefer_https,
-            collapse_index,
-    )
+    return p.text(), _canon_links(p.hrefs, _effective_base(p, base_url), policy)
 
 
 def extract_all(
     html: bytes | str | None,
     base_url: str | None,
     sitemap_aware: bool = False,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> tuple[str, list[str], str, list[str], dict[str, str]]:
     """Parse *html* once; return (text, links, title, headings, meta) — the
     structured-record extraction surface. text/links are byte-identical to
@@ -409,15 +359,7 @@ def extract_all(
         if looks_like_sitemap(doc):
             return (
                 "",
-                _canon_links(
-                    sitemap_locs(doc), base_url,
-            strip_tracking,
-            collapse_www,
-            sort_query,
-            strip_session,
-            prefer_https,
-            collapse_index,
-                ),
+                _canon_links(sitemap_locs(doc), base_url, policy),
                 "",
                 [],
                 {},
@@ -425,15 +367,7 @@ def extract_all(
     p = _parse(html)
     return (
         p.text(),
-        _canon_links(
-            p.hrefs, _effective_base(p, base_url),
-            strip_tracking,
-            collapse_www,
-            sort_query,
-            strip_session,
-            prefer_https,
-            collapse_index,
-        ),
+        _canon_links(p.hrefs, _effective_base(p, base_url), policy),
         p.title(),
         p.headings,
         p.meta,
@@ -480,12 +414,7 @@ def meta_robots_flags(meta: dict[str, str]) -> tuple[bool, bool]:
 def canonical_target(
     href: str | None,
     base_url: str | None,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> str | None:
     """Resolve a ``<link rel="canonical">`` href to a canonical URL —
     SEMANTICS.md §Canonical link: ``urljoin(base, href)`` then
@@ -501,26 +430,14 @@ def canonical_target(
         absu = urljoin(base_url or "", h)
     except ValueError:
         return None
-    return canonicalize_url(absu,
-        strip_tracking,
-        collapse_www,
-        sort_query,
-        strip_session,
-        prefer_https,
-        collapse_index,
-    )
+    return canonicalize_url(absu, *policy)
 
 
 def meta_refresh_target(
     content: str | None,
     base_url: str | None,
     page_url: str | None = None,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> tuple[int, str] | None:
     """(delay_seconds, resolved_target) from a meta http-equiv=refresh
     content string — SEMANTICS.md §Meta refresh (normative; the oracle
@@ -549,14 +466,7 @@ def meta_refresh_target(
     t = r[4:].strip()
     if len(t) >= 2 and t[0] == t[-1] and t[0] in ("'", '"'):
         t = t[1:-1].strip()
-    target = canonical_target(t, base_url,
-        strip_tracking,
-        collapse_www,
-        sort_query,
-        strip_session,
-        prefer_https,
-        collapse_index,
-    )
+    target = canonical_target(t, base_url, policy)
     if target is None or target == (page_url if page_url is not None else base_url):
         return None
     return int(delay_s), target
@@ -566,12 +476,7 @@ def hreflang_targets(
     alternate_hrefs: list[str],
     base_url: str | None,
     page_url: str | None = None,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> list[str]:
     """Resolved ``<link rel=alternate hreflang>`` targets — SEMANTICS.md
     §Hreflang alternates (normative; the oracle shares this kernel).
@@ -587,15 +492,7 @@ def hreflang_targets(
     self_url = page_url if page_url is not None else base_url
     out: list[str] = []
     seen: set[str] = set()
-    for c in _canon_links(
-        alternate_hrefs, base_url,
-        strip_tracking,
-        collapse_www,
-        sort_query,
-        strip_session,
-        prefer_https,
-        collapse_index,
-    ):
+    for c in _canon_links(alternate_hrefs, base_url, policy):
         if c == self_url or c in seen:
             continue
         seen.add(c)
@@ -608,12 +505,7 @@ def extract_text_links_signals(
     base_url: str | None,
     sitemap_aware: bool = False,
     anchor_nofollow: bool = False,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
     hreflang: bool = False,
 ) -> tuple[
     str,
@@ -653,15 +545,7 @@ def extract_text_links_signals(
         if looks_like_sitemap(doc):
             return (
                 "",
-                _canon_links(
-                    sitemap_locs(doc), base_url,
-            strip_tracking,
-            collapse_www,
-            sort_query,
-            strip_session,
-            prefer_https,
-            collapse_index,
-                ),
+                _canon_links(sitemap_locs(doc), base_url, policy),
                 False,
                 False,
                 None,
@@ -673,68 +557,23 @@ def extract_text_links_signals(
     noindex, nofollow = meta_robots_flags(p.meta)
     eb = _effective_base(p, base_url)
     if anchor_nofollow:
-        links, anchor_dropped = _canon_links_rels(
-            p.hrefs, p.href_rels, eb,
-            strip_tracking,
-            collapse_www,
-            sort_query,
-            strip_session,
-            prefer_https,
-            collapse_index,
-        )
+        links, anchor_dropped = _canon_links_rels(p.hrefs, p.href_rels, eb, policy)
     else:
-        links, anchor_dropped = (
-            _canon_links(p.hrefs, eb,
-        strip_tracking,
-        collapse_www,
-        sort_query,
-        strip_session,
-        prefer_https,
-        collapse_index,
-    ),
-            0,
-        )
+        links, anchor_dropped = _canon_links(p.hrefs, eb, policy), 0
     return (
         p.text(),
         links,
         noindex,
         nofollow,
-        canonical_target(p.canonical_href, eb,
-        strip_tracking,
-        collapse_www,
-        sort_query,
-        strip_session,
-        prefer_https,
-        collapse_index,
-    ),
-        meta_refresh_target(
-            p.refresh_content,
-            eb,
-            page_url=base_url,
-            strip_tracking=strip_tracking,
-            collapse_www=collapse_www,
-            sort_query=sort_query,
-            strip_session=strip_session,
-            prefer_https=prefer_https,
-            collapse_index=collapse_index,
-        ),
+        canonical_target(p.canonical_href, eb, policy),
+        meta_refresh_target(p.refresh_content, eb, base_url, policy),
         anchor_dropped,
         # resolving alternates costs urljoin + full canonicalization per
         # collected <link rel=alternate hreflang> (international sites
         # list dozens per page), so it only runs when the knob asks —
         # callers with other signal flags on no longer pay for a result
         # they discard
-        hreflang_targets(
-            p.alternate_hrefs,
-            eb,
-            page_url=base_url,
-            strip_tracking=strip_tracking,
-            collapse_www=collapse_www,
-            sort_query=sort_query,
-            strip_session=strip_session,
-            prefer_https=prefer_https,
-            collapse_index=collapse_index,
-        )
+        hreflang_targets(p.alternate_hrefs, eb, base_url, policy)
         if hreflang
         else [],
     )
@@ -744,24 +583,11 @@ def extract_text_links_robots(
     html: bytes | str | None,
     base_url: str | None,
     sitemap_aware: bool = False,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> tuple[str, list[str], bool, bool]:
     """(text, links, noindex, nofollow) — the meta-robots slice of
     ``extract_text_links_signals`` (same single parse)."""
     text, links, noindex, nofollow, _, _, _, _ = extract_text_links_signals(
-        html,
-        base_url,
-        sitemap_aware,
-        strip_tracking=strip_tracking,
-        collapse_www=collapse_www,
-        sort_query=sort_query,
-        strip_session=strip_session,
-        prefer_https=prefer_https,
-        collapse_index=collapse_index,
+        html, base_url, sitemap_aware, policy=policy
     )
     return text, links, noindex, nofollow

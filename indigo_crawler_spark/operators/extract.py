@@ -23,6 +23,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
 from indigo_crawler_spark.kernels.textextract import (
     extract_all,
     extract_text_and_links,
@@ -56,12 +57,7 @@ def extract_pages(
     meta_refresh: bool = False,
     anchor_nofollow: bool = False,
     hreflang: bool = False,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> DataFrame:
     """(canon_url, depth, html) → (canon_url, depth, text, links).
 
@@ -83,7 +79,8 @@ def extract_pages(
     hreflang alternate targets to the out-links — pinned order anchors →
     alternates → refresh target — and adds an int ``hreflang_added``
     count (SEMANTICS.md §Hreflang alternates — a metric column, never
-    persisted).
+    persisted). *policy* (cfg.canon_policy) selects the URL-alias rules
+    every out-link is canonicalized under.
     All signals come from the SAME parse, so text (and links, under the
     default flags) stay byte-identical and html still crosses Arrow
     exactly once.
@@ -114,20 +111,8 @@ def extract_pages(
             noidx, nofol, canon, redir, adrop, hladd = [], [], [], [], [], []
             for html, base in zip(pdf["html"], pdf["canon_url"]):
                 if any_signal:
-                    t, ls, ni, nf, cu, rf, ad, alts = (
-                        extract_text_links_signals(
-                            html,
-                            base,
-                            sitemap_aware,
-                            anchor_nofollow,
-                            strip_tracking,
-                            collapse_www,
-                            sort_query,
-                            strip_session,
-                            prefer_https,
-                            collapse_index,
-                            hreflang=hreflang,
-                        )
+                    t, ls, ni, nf, cu, rf, ad, alts = extract_text_links_signals(
+                        html, base, sitemap_aware, anchor_nofollow, policy, hreflang
                     )
                     noidx.append(ni)
                     nofol.append(nf)
@@ -146,11 +131,7 @@ def extract_pages(
                     else:
                         redir.append(False)
                 else:
-                    t, ls = extract_text_and_links(
-                        html, base, sitemap_aware, strip_tracking,
-                        collapse_www, sort_query, strip_session,
-                        prefer_https, collapse_index,
-                    )
+                    t, ls = extract_text_and_links(html, base, sitemap_aware, policy)
                 texts.append(t)
                 links.append(ls)
             out = {
@@ -178,12 +159,7 @@ def extract_pages(
 def extract_pages_with_fields(
     df: DataFrame,
     sitemap_aware: bool = False,
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
+    policy: CanonPolicy = CanonPolicy(),
 ) -> DataFrame:
     """(canon_url, depth, html) → (…, text, links, title, headings, meta) —
     the structured-record extraction the reference's listing-page parser
@@ -196,11 +172,7 @@ def extract_pages_with_fields(
         for pdf in batches:
             texts, links, titles, heads, metas = [], [], [], [], []
             for html, base in zip(pdf["html"], pdf["canon_url"]):
-                t, ls, ti, hs, me = extract_all(
-                    html, base, sitemap_aware, strip_tracking,
-                    collapse_www, sort_query, strip_session,
-                    prefer_https, collapse_index,
-                )
+                t, ls, ti, hs, me = extract_all(html, base, sitemap_aware, policy)
                 texts.append(t)
                 links.append(ls)
                 titles.append(ti)

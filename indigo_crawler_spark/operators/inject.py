@@ -66,16 +66,7 @@ def inject_seeds(state, urls: DataFrame, seed_rank: int = 0) -> int:
         )
 
     ranked = urls.select(
-        make_canonicalize_udf(
-            cfg.strip_tracking_enabled,
-            cfg.collapse_www_enabled,
-            cfg.sort_query_enabled,
-            cfg.strip_session_enabled,
-            cfg.prefer_https_enabled,
-            cfg.collapse_index_enabled,
-        )(F.col("url")).alias(
-            "canon_url"
-        ),
+        make_canonicalize_udf(cfg.canon_policy)(F.col("url")).alias("canon_url"),
         (
             F.col("seed_rank").cast("int")
             if "seed_rank" in urls.columns

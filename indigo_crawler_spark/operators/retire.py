@@ -59,16 +59,7 @@ def retire_urls(state, urls: DataFrame) -> int:
     live_seen = state.seen_through((done + 1) if done is not None else 0)
     keyed = (
         urls.select(
-            make_canonicalize_udf(
-                cfg.strip_tracking_enabled,
-                cfg.collapse_www_enabled,
-                cfg.sort_query_enabled,
-                cfg.strip_session_enabled,
-                cfg.prefer_https_enabled,
-                cfg.collapse_index_enabled,
-            )(F.col("url")).alias(
-                "canon_url"
-            )
+            make_canonicalize_udf(cfg.canon_policy)(F.col("url")).alias("canon_url")
         )
         .where(F.col("canon_url").isNotNull())
         .distinct()

@@ -62,7 +62,11 @@ from pyspark.sql.types import (
 
 from indigo_crawler_spark.functions.keys import host_expr, host_hash_expr, pk_expr
 from indigo_crawler_spark.plans import schemas
-from indigo_crawler_spark.plans.round import CrawlState, last_complete_round
+from indigo_crawler_spark.plans.round import (
+    CrawlState,
+    last_complete_round,
+    session_conf,
+)
 
 MANIFEST = "_export_manifest.json"
 
@@ -437,6 +441,18 @@ def _read_source(spark, corpus_path: str, verb: str) -> tuple[dict, DataFrame]:
     return src, _read_pk_dirs(spark, corpus_path, dirs)
 
 
+# AQE's empty-relation propagation replaces a plan whose shuffle came back
+# empty by an empty relation, and the observed node goes with it: a stage
+# whose every row is dropped before the layout write then fails in
+# Observation.get. Excluding that one rule keeps the node, so the stage
+# reports its true input counts; every other adaptive rule stays on.
+_KEEP_OBSERVED = {
+    "spark.sql.adaptive.optimizer.excludedRules": (
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    )
+}
+
+
 def _write_product(df: DataFrame, out_path: str, by: str = "pk") -> None:
     """The layout write of every corpus product. The layout shuffle clusters
     rows by their output partition so each ``<by>=`` dir gets ONE file
@@ -444,9 +460,10 @@ def _write_product(df: DataFrame, out_path: str, by: str = "pk") -> None:
     widths that difference is partitions × buckets small files). File size
     per pk is governed by num_buckets — the same knob that sizes every other
     per-bucket structure in the engine."""
-    df.repartition(F.col(by)).write.mode("overwrite").partitionBy(by).parquet(
-        out_path
-    )
+    with session_conf(df.sparkSession, **_KEEP_OBSERVED):
+        df.repartition(F.col(by)).write.mode("overwrite").partitionBy(by).parquet(
+            out_path
+        )
 
 
 def _write_product_manifest(out_path: str, src: dict, rows: int, **fields) -> None:
@@ -805,8 +822,11 @@ def dedup_corpus(
             threshold=near_threshold,
             n=shingle_n,
         )
-        labels = connected_components(pairs, "a", "b")
-        near_exact = int(deduped.count())
+        # the component pass runs its own actions over the cached frame that
+        # carries obs_in, so it keeps that node like the product write does
+        with session_conf(spark, **_KEEP_OBSERVED):
+            labels = connected_components(pairs, "a", "b")
+            near_exact = int(deduped.count())
         result = (
             deduped.join(labels, deduped["canon_url"] == labels["node"], "left")
             .where(

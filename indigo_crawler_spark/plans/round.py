@@ -28,6 +28,7 @@ because AQE does not skew-split window functions.
 from __future__ import annotations
 
 import threading
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -209,28 +210,26 @@ def _timer():
     return {}
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
-def _no_aqe(spark: SparkSession):
-    """AQE off for the round's SERIAL PREFIX (gate pass → salted politeness
-    window → distributed rank collect → fetch_batches write). Every join and
-    shuffle on that path is already explicitly engineered — broadcast /
-    SHUFFLE_HASH hints, explicit skew salting, fixed shuffle partitions,
-    repartitionByRange — so adaptive re-planning cannot change the strategy;
-    it only multiplies the path into per-stage driver jobs, each a serial
-    driver round-trip at 1000 executors (measured: the rank collect alone
-    submitted 11 jobs under AQE, 2 without). Race-free because the prefix
-    runs before the round's thread pool spins up, and the session conf is
-    restored before any concurrent query plans. The big variable-shape
-    queries later in the round (discovery joins, frontier write) keep AQE."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+def session_conf(spark: SparkSession, **overrides: str):
+    """Set *overrides* on the session for the body of the ``with``, then hand
+    every key back as it was found: its previous value set again, or
+    ``unset`` when the session never set it — so the key reads its own
+    default again, not the value this scope chose. The one way the engine
+    scopes a session conf. The conf is shared by every thread of the
+    session, so a scope must not open or close while another thread is
+    planning a query on it."""
+    prev = {key: spark.conf.get(key, None) for key in overrides}
+    for key, value in overrides.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 class _timed:
@@ -679,29 +678,6 @@ class CrawlState:
         ]
 
 
-def _canonicalized(
-    df: DataFrame,
-    url_col: str = "url",
-    strip_tracking: bool = False,
-    collapse_www: bool = False,
-    sort_query: bool = False,
-    strip_session: bool = False,
-    prefer_https: bool = False,
-    collapse_index: bool = False,
-) -> DataFrame:
-    return df.withColumn(
-        "canon_url",
-        make_canonicalize_udf(
-            strip_tracking,
-            collapse_www,
-            sort_query,
-            strip_session,
-            prefer_https,
-            collapse_index,
-        )(F.col(url_col)),
-    )
-
-
 def derived_filter_capacity(distinct_urls_est: int, cfg: CrawlConfig) -> int:
     """A4 sizing from A3: per-bucket filter capacity from the corpus
     distinct-URL estimate. Headroom over the estimate because the seen set
@@ -744,16 +720,9 @@ def bootstrap(
     # for API compatibility; the counts are free now)
     del with_counters
     pages_obs = Observation()
+    canonicalize = make_canonicalize_udf(cfg.canon_policy)
     pc = (
-        _canonicalized(
-            pages,
-            strip_tracking=cfg.strip_tracking_enabled,
-            collapse_www=cfg.collapse_www_enabled,
-            sort_query=cfg.sort_query_enabled,
-            strip_session=cfg.strip_session_enabled,
-            prefer_https=cfg.prefer_https_enabled,
-            collapse_index=cfg.collapse_index_enabled,
-        )
+        pages.withColumn("canon_url", canonicalize(F.col("url")))
         .drop("text")
         .observe(
             pages_obs,
@@ -826,15 +795,7 @@ def bootstrap(
 
         # round-0 frontier from seeds: dedup per canon_url keep min seed_rank
         seeds_obs = Observation()
-        sc = _canonicalized(
-            seeds,
-            strip_tracking=cfg.strip_tracking_enabled,
-            collapse_www=cfg.collapse_www_enabled,
-            sort_query=cfg.sort_query_enabled,
-            strip_session=cfg.strip_session_enabled,
-            prefer_https=cfg.prefer_https_enabled,
-            collapse_index=cfg.collapse_index_enabled,
-        ).observe(
+        sc = seeds.withColumn("canon_url", canonicalize(F.col("url"))).observe(
             seeds_obs, _sum0(F.col("canon_url").isNull()).alias("quarantined")
         )
         sc = sc.where(F.col("canon_url").isNotNull()).select(
@@ -855,18 +816,7 @@ def bootstrap(
                 robots.select(
                     F.explode(robots_sitemaps_udf(F.col("robots_txt"))).alias("url")
                 )
-                .select(
-                    make_canonicalize_udf(
-                        cfg.strip_tracking_enabled,
-                        cfg.collapse_www_enabled,
-                        cfg.sort_query_enabled,
-                        cfg.strip_session_enabled,
-                        cfg.prefer_https_enabled,
-                        cfg.collapse_index_enabled,
-                    )(
-                        F.col("url")
-                    ).alias("canon_url")
-                )
+                .select(canonicalize(F.col("url")).alias("canon_url"))
                 .where(F.col("canon_url").isNotNull())
                 .observe(sitemap_obs, F.count(F.lit(1)).alias("sitemap_seed_urls"))
                 .select("canon_url", F.lit(None).cast("int").alias("seed_rank"))
@@ -1022,841 +972,843 @@ def run_round(
     # ~0.3-0.4s/round here. At-scale rounds keep AQE for the
     # variable-shape discovery suffix (skew splits, partition coalescing)
     # exactly as before; the session conf is restored when the round ends.
-    _aqe_prev = None
-    _shuf_prev = None
-    if rank_single:
-        _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # small rounds also shrink the reduce-partition count (r6 second
-        # pass — guide §2.2 fewer/larger partitions, §6 small files): see
-        # _SMALL_ROUND_SHUFFLE. Restored with AQE when the round ends; the
-        # effective value is read, so a session that never set the key gets
-        # its default back too.
-        _shuf_prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_SMALL_ROUND_SHUFFLE))
-    gx = _gate_exprs()
-    gate_obs = Observation()
-    gated = (
-        gate_frontier(
-            frontier, robots, budgets, cfg, round_no, emitted_totals,
-            small_host_dim=small_host_dim,
-        )
-        .observe(gate_obs, *gx["metrics"])
-        .cache()
+    # Small rounds also shrink the reduce-partition count (r6 second pass —
+    # guide §2.2 fewer/larger partitions, §6 small files): see
+    # _SMALL_ROUND_SHUFFLE.
+    small_round = (
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(_SMALL_ROUND_SHUFFLE),
+        }
+        if rank_single
+        else {}
     )
-    eligible = gated.where(gx["eligible"])
-    if cfg.age_weight:
-        # priority aging (SEMANTICS.md §Priority aging): the RANK-TIME
-        # effective priority, applied on the eligible slice only — the
-        # frontier-advance below reads `gated`, so stored priorities stay
-        # base and deferral never compounds. Everything downstream (the
-        # politeness windows, the domain cap, the global rank, the emitted
-        # priority column) uniformly sees the boosted value — exactly the
-        # oracle's rank-time copy.
-        from indigo_crawler_spark.functions.scoring import aged_priority_expr
-
-        eligible = eligible.withColumn(
-            "priority",
-            aged_priority_expr(
-                F.col("priority"),
-                F.col("discovered_round"),
-                round_no,
-                cfg.age_weight,
-            ),
-        )
-
-    # frontier-skew fold: per-host candidate counts over THIS round's gate
-    # frame become round R+1's salted-host dimension (link-farm hosts heavy
-    # only in the frontier get the two-phase window next round — one round of
-    # lag, never wrong: salting is purely physical). Round-4 serial-floor
-    # shape: ONE single-row stats job on the cached gate frame feeds the
-    # manifest counters, and heavy_hosts_frontier is written ONLY when some
-    # host actually crossed the threshold — a calm round pays a tiny collect
-    # instead of an empty-table write job + file commit every round. Runs on
-    # the pool below (gated's cache is populated by the rank collect first).
-    tm = _timer()
-
-    def _skew_fold() -> tuple[int, int]:
-        with _timed(tm, "skew_fold"):
-            counts = gated.groupBy("host").agg(F.count("*").alias("cand_count"))
-            row = counts.agg(
-                F.coalesce(F.max("cand_count"), F.lit(0)).alias("mx"),
-                _sum0(F.col("cand_count") > cfg.salt_threshold).alias("nh"),
-            ).collect()[0]
-            mx, nh = int(row["mx"]), int(row["nh"])
-            if nh:
-                io.write(
-                    counts.where(F.col("cand_count") > cfg.salt_threshold).select(
-                        "host"
-                    ),
-                    f"heavy_hosts_frontier/round={round_no + 1}",
-                )
-            return mx, nh
-
-    # 3. per-host politeness top-B (salted for heavy hosts — J4/W2; the heavy
-    #    dimension = bootstrap page counts ∪ round R-1's frontier counts)
-    # 4. global cap + sequencing (distributed exact rank; the pk set of the
-    #    kept rows — a superset of the emitted pks, equal except when the
-    #    global cap bites — falls out of the same collect for store pruning)
-    with _no_aqe(spark):
-        kept = politeness_topk_skew_aware(
-            eligible, cfg, state.heavy_hosts(round_no)
-        )
-        # optional registered-domain shared cap (SEMANTICS.md §Politeness):
-        # rides between the host cap and the global cap; host_kept is
-        # observed on the intermediate frame so budget_deferred /
-        # domain_deferred split without an extra count job
-        host_obs = None
-        if cfg.domain_budget:
-            from indigo_crawler_spark.operators.politeness import domain_topk
-
-            host_obs = Observation()
-            kept = domain_topk(
-                kept.observe(host_obs, F.count(F.lit(1)).alias("host_kept")),
-                cfg.domain_budget,
-                cfg.num_salts,
+    with session_conf(spark, **small_round):
+        gx = _gate_exprs()
+        gate_obs = Observation()
+        gated = (
+            gate_frontier(
+                frontier, robots, budgets, cfg, round_no, emitted_totals,
+                small_host_dim=small_host_dim,
             )
-        kept = kept.cache()
-        with _timed(tm, "gates_rank_collect"):
-            emitted, n_kept, kept_pks, rank_cache = sequence_batches(
-                kept, round_no, cfg.round_limit, cfg.batch_size,
-                gather_col="pk", single_partition=rank_single,
-            )
-        n_emitted = min(n_kept, cfg.round_limit)
-        from indigo_crawler_spark.operators.feedback import (
-            fetch_status_expr,
-            retry_exprs,
-        )
-
-        # fetch status is SEMANTICS (SEMANTICS.md §Backoff / §Transient
-        # failures) — computed at ONE site on the cached emitted frame;
-        # fetch_batches, the A7 metrics rollup and the EP3 budget fold
-        # below all reuse the same column. With the retry knob on, the
-        # url's failure count so far joins first (committed state < R, one
-        # small join on the ≤K emitted slice) and salts the outcome draw.
-        if cfg.fail_every:
-            emitted = (
-                emitted.join(
-                    state.retries_through(round_no).hint("SHUFFLE_HASH"),
-                    on="canon_url",
-                    how="left",
-                )
-                .withColumn("_attempt", F.coalesce(F.col("fails"), F.lit(0)))
-                .drop("fails")
-            )
-            emitted = emitted.withColumn(
-                "status", fetch_status_expr(cfg, F.col("_attempt"))
-            ).cache()
-            rx = retry_exprs(
-                F.col("status"), F.col("_attempt"), cfg.max_retries
-            )
-            # "the url is DONE with the crawl": fetched (ok/banned) or
-            # retry-exhausted — the set that enters seen and leaves the
-            # frontier; retained failures stay behind for the next round
-            emitted_done = emitted.where(~rx["failed"] | rx["exhausted"])
-        else:
-            emitted = emitted.withColumn(
-                "status", fetch_status_expr(cfg)
-            ).cache()
-            rx = None
-            emitted_done = emitted
-
-        fb_obs = Observation()
-        fb_metrics = [_sum0(F.col("status") == "banned").alias("banned")]
-        if rx is not None:
-            fb_metrics.append(_sum0(rx["failed"]).alias("fetch_failed"))
-            fb_metrics.append(_sum0(rx["exhausted"]).alias("retry_exhausted"))
-        fetch_batches = emitted.select(
-            "round", "batch_id", "canon_url", "host", "host_hash", "priority",
-            "rank_in_host", "global_rank", "status",
-            *(["_attempt"] if rx is not None else []),
-        ).observe(fb_obs, *fb_metrics)
-        fetch_batches = fetch_batches.drop("_attempt")
-    # rank_cache/kept stay persisted until END of round: every consumer of
-    # `emitted` (the fetch_batches write below, seen write, digest, metrics,
-    # budget fold, the extract join) computes through the caches, and on a
-    # real cluster a lost cache block triggers recompute through the ranker
-    # — which re-samples range bounds and would produce DIFFERENT ranks
-    # than the frozen offsets if rank_cache were already gone (silent
-    # divergence between committed tables). While rank_cache lives,
-    # recompute replays the exact partition layout the offsets were
-    # collected from. Residual (double-loss of both caches mid-round)
-    # surfaces as a digest-verify refusal on resume — fail-loud, never
-    # silent.
-    #
-    # K-bounded output sizing (r6 — guide §6 small-files): the emitted-slice
-    # tables (fetch_batches, seen delta, retries) inherit the ranker's
-    # shuffle-partition count, which writes one near-empty file per
-    # partition at small K and is still only a physical layout at large K —
-    # derive the file count from the known row bound instead (n_emitted is
-    # already on the driver; no extra action). ~200k rows/file keeps
-    # production-K rounds at a handful of right-sized files and small
-    # rounds at one.
-    out_parts = max(1, -(-n_emitted // 200_000))
-
-    pool = ThreadPoolExecutor(max_workers=5)
-    try:
-        # the fetch_batches write overlaps the (driver-side, lazy) plan
-        # construction of the extract/discovery stages below instead of
-        # blocking the main thread (r6): its input is the cached ranker
-        # output, so concurrent consumers of `emitted` just re-project from
-        # rank_cache until the cache fills — deterministic either way.
-        def _w_fb():
-            with _timed(tm, "fetch_batches_write"):
-                io.write(
-                    fetch_batches.coalesce(out_parts),
-                    f"fetch_batches/round={round_no}",
-                )
-
-        f_fb = pool.submit(_w_fb)
-        f_skew = pool.submit(_skew_fold)
-        # seen takes the DONE slice (SEMANTICS.md §Transient failures):
-        # fetched urls plus retry-exhausted give-ups; retained failures
-        # stay out of seen so the next round can re-emit them
-        seen_delta = emitted_done.select(
-            "canon_url",
-            url_hash_expr(F.col("canon_url")).alias("url_hash"),
-            F.col("pk"),
-            F.lit(round_no).alias("first_round"),
-        )
-        def _w_seen():
-            with _timed(tm, "seen_write"):
-                io.write(seen_delta.coalesce(out_parts), f"seen/round={round_no}")
-
-        f_seen = pool.submit(_w_seen)
-
-        # A7 engine-side rollup metrics: (host, status) / (host) / () counts
-        # over the ≤K emitted rows — tiny cached-input job, off the critical
-        # path. The () grand total equals the `emitted` counter; per-host
-        # rows are a TABLE (round_metrics/round=R), not manifest JSON — at
-        # 50M hosts a manifest-embedded rollup would be absurd.
-        metrics = (
-            emitted.select("host", "status")
-            .rollup("host", "status")
-            .agg(F.count("*").alias("n"))
-        )
-        f_metrics = pool.submit(
-            io.write, metrics, f"round_metrics/round={round_no}"
-        )
-
-        # (the EP3 budget folds are submitted after the extract below —
-        # the thin-host fold reads the extracted slice)
-
-        # 5. fetch: emitted ⋈ page store — broadcast the ≤K emitted urls into
-        # the store scan so the 100 TB side never shuffles, and prune store
-        # buckets to the pks actually touched (partition pruning: at P=256 a
-        # typical round reads a fraction of the store's directories).
-        store = state.fetchable_store(kept_pks)
-        # strategy switch on the known emitted count: small rounds broadcast
-        # the url list into the scan; huge rounds (K in the millions) would
-        # serialize a giant broadcast build — shuffle-hash join instead (the
-        # store slice shuffles once; never sorted).
-        # failed fetches (SEMANTICS.md §Transient failures) yield no page:
-        # they never reach the store join, so no text, no links, no
-        # discovery — the where folds away when the knob is off
-        fetch_src = (
-            emitted.where(F.col("status") != "failed")
-            if rx is not None
-            else emitted
-        )
-        emitted_sel = fetch_src.select("canon_url", "depth")
-        small_round = n_emitted <= 200_000
-        if small_round:
-            fetched = store.join(
-                F.broadcast(emitted_sel), on="canon_url", how="inner"
-            )
-        else:
-            fetched = store.join(
-                emitted_sel.hint("SHUFFLE_HASH"), on="canon_url", how="inner"
-            )
-        ext_obs = Observation()
-        ext_metrics = [
-            F.count(F.lit(1)).alias("fetched_pages"),
-            F.coalesce(F.sum(F.size("links")), F.lit(0)).alias("links_extracted"),
-        ]
-        if cfg.meta_robots_enabled:
-            # links withheld by REP nofollow (SEMANTICS.md §Meta robots) —
-            # rides the same observe, zero extra jobs
-            ext_metrics.append(
-                F.coalesce(
-                    F.sum(F.when(F.col("nofollow"), F.size("links")).otherwise(0)),
-                    F.lit(0),
-                ).alias("nofollow_dropped")
-            )
-        if cfg.rel_canonical_enabled:
-            # pages declaring a canonical target other than themselves
-            # (SEMANTICS.md §Canonical link) — the export-time collapse set
-            ext_metrics.append(
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("canonical_url").isNotNull()
-                            & (F.col("canonical_url") != F.col("canon_url")),
-                            1,
-                        ).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias("canonical_variants")
-            )
-        if cfg.meta_refresh_enabled:
-            # delay-0 pure redirects (SEMANTICS.md §Meta refresh) — the
-            # export-time drop set; the appended target already rides links
-            ext_metrics.append(
-                F.coalesce(
-                    F.sum(F.col("redirect").cast("int")), F.lit(0)
-                ).alias("refresh_redirects")
-            )
-        if cfg.anchor_nofollow_enabled:
-            # links withheld by anchor-level rel=nofollow (SEMANTICS.md
-            # §Anchor nofollow) — dropped at extraction, so links/
-            # links_extracted/discovery/link-graph all already exclude them
-            ext_metrics.append(
-                F.coalesce(F.sum("anchor_dropped"), F.lit(0)).alias(
-                    "anchor_nofollow_dropped"
-                )
-            )
-        if cfg.hreflang_enabled:
-            # alternate targets appended into links (SEMANTICS.md §Hreflang
-            # alternates) — already inside links_extracted; counted
-            # separately so operators see the discovery the signal buys
-            ext_metrics.append(
-                F.coalesce(F.sum("hreflang_added"), F.lit(0)).alias(
-                    "hreflang_alternates"
-                )
-            )
-        extracted = (
-            extract_pages(
-                fetched,
-                sitemap_aware=cfg.sitemaps_enabled,
-                meta_robots=cfg.meta_robots_enabled,
-                rel_canonical=cfg.rel_canonical_enabled,
-                meta_refresh=cfg.meta_refresh_enabled,
-                anchor_nofollow=cfg.anchor_nofollow_enabled,
-                hreflang=cfg.hreflang_enabled,
-                strip_tracking=cfg.strip_tracking_enabled,
-                collapse_www=cfg.collapse_www_enabled,
-                sort_query=cfg.sort_query_enabled,
-                strip_session=cfg.strip_session_enabled,
-                prefer_https=cfg.prefer_https_enabled,
-                collapse_index=cfg.collapse_index_enabled,
-            )
-            .observe(ext_obs, *ext_metrics)
+            .observe(gate_obs, *gx["metrics"])
             .cache()
         )
-        # REP nofollow (SEMANTICS.md §Meta robots): a nofollow page's
-        # out-links are withheld from BOTH the link graph and discovery —
-        # nofollow is an endorsement signal, so the edges pass no rank and
-        # the children are not admitted through this page. One lazy filter
-        # over the cached frame; folds away when the flag is off.
-        followable = (
-            extracted.where(~F.col("nofollow"))
-            if cfg.meta_robots_enabled
-            else extracted
-        )
-        # under meta_robots / rel_canonical the page-level indexing
-        # signals ride the text table so the corpus export can honor
-        # them; text bytes are unchanged either way
-        text_cols = ["canon_url", "text"]
-        if cfg.meta_robots_enabled:
-            text_cols.append("noindex")
-        if cfg.rel_canonical_enabled:
-            text_cols.append("canonical_url")
-        if cfg.meta_refresh_enabled:
-            text_cols.append("redirect")
+        eligible = gated.where(gx["eligible"])
+        if cfg.age_weight:
+            # priority aging (SEMANTICS.md §Priority aging): the RANK-TIME
+            # effective priority, applied on the eligible slice only — the
+            # frontier-advance below reads `gated`, so stored priorities stay
+            # base and deferral never compounds. Everything downstream (the
+            # politeness windows, the domain cap, the global rank, the emitted
+            # priority column) uniformly sees the boosted value — exactly the
+            # oracle's rank-time copy.
+            from indigo_crawler_spark.functions.scoring import aged_priority_expr
 
-        # pooled (r6): the extract write — the Arrow parse pass that fills
-        # the `extracted` cache — overlaps the driver-side construction of
-        # the discovery plan below. Every OTHER reader of the extracted
-        # cache (links, thin-host fold, revisit, the discovery jobs) waits
-        # on this future first so exactly one task pays the parse; the pool
-        # has a free worker by submission order (at most fb/skew/seen/
-        # metrics are in flight, max_workers=5), so the future always
-        # RUNS rather than queuing behind its own waiters.
-        def _w_extract():
-            with _timed(tm, "extract_text_write"):
-                io.write(
-                    extracted.select(*text_cols),
-                    f"fetched_text/round={round_no}",
-                )
-
-        f_extract = pool.submit(_w_extract)
-
-        # link-graph edges (SEMANTICS.md §PageRank priority): every fetched
-        # page's out-links as (src, dst) rows — extraction facts, recorded
-        # BEFORE the depth cap and trap gate (those govern frontier
-        # admission, not the graph). Emitted-slice scale (≤K pages × avg
-        # out-degree), pooled off the critical path; reads the cached
-        # extracted frame, so it costs no second Arrow pass.
-        f_links = None
-        if cfg.pagerank_every:
-            links_edges = followable.select(
-                F.col("canon_url").alias("src"),
-                F.explode("links").alias("dst"),
+            eligible = eligible.withColumn(
+                "priority",
+                aged_priority_expr(
+                    F.col("priority"),
+                    F.col("discovered_round"),
+                    round_no,
+                    cfg.age_weight,
+                ),
             )
 
-            def _w_links() -> None:
-                f_extract.result()  # one parse: wait for the cache fill
-                with _timed(tm, "links_write"):
-                    io.write(links_edges, f"links/round={round_no}")
+        # frontier-skew fold: per-host candidate counts over THIS round's gate
+        # frame become round R+1's salted-host dimension (link-farm hosts heavy
+        # only in the frontier get the two-phase window next round — one round of
+        # lag, never wrong: salting is purely physical). Round-4 serial-floor
+        # shape: ONE single-row stats job on the cached gate frame feeds the
+        # manifest counters, and heavy_hosts_frontier is written ONLY when some
+        # host actually crossed the threshold — a calm round pays a tiny collect
+        # instead of an empty-table write job + file commit every round. Runs on
+        # the pool below (gated's cache is populated by the rank collect first).
+        tm = _timer()
 
-            f_links = pool.submit(_w_links)
+        def _skew_fold() -> tuple[int, int]:
+            with _timed(tm, "skew_fold"):
+                counts = gated.groupBy("host").agg(F.count("*").alias("cand_count"))
+                row = counts.agg(
+                    F.coalesce(F.max("cand_count"), F.lit(0)).alias("mx"),
+                    _sum0(F.col("cand_count") > cfg.salt_threshold).alias("nh"),
+                ).collect()[0]
+                mx, nh = int(row["mx"]), int(row["nh"])
+                if nh:
+                    io.write(
+                        counts.where(F.col("cand_count") > cfg.salt_threshold).select(
+                            "host"
+                        ),
+                        f"heavy_hosts_frontier/round={round_no + 1}",
+                    )
+                return mx, nh
 
-        # EP3 feedback folds into next round's budgets (versioned;
-        # deterministic ⇒ replay-safe), off the critical path and composed
-        # into ONE write: ban→backoff reads emitted's statuses from cache,
-        # thin-content demotion (SEMANTICS.md §Thin-host demotion) reads
-        # the cached extracted slice — its demoted-host counter rides the
-        # budgets write via Observation (zero extra jobs).
-        f_budgets = None
-        thin_obs = None
-        failhost_obs = None
-        failhost_on = bool(cfg.fail_every and cfg.fail_host_threshold)
-        if cfg.ban_every or cfg.thin_host_min_words or failhost_on:
+        # 3. per-host politeness top-B (salted for heavy hosts — J4/W2; the heavy
+        #    dimension = bootstrap page counts ∪ round R-1's frontier counts)
+        # 4. global cap + sequencing (distributed exact rank; the pk set of the
+        #    kept rows — a superset of the emitted pks, equal except when the
+        #    global cap bites — falls out of the same collect for store pruning)
+        # AQE off for the round's SERIAL PREFIX (gate pass → salted
+        # politeness window → distributed rank collect → fetch_batches
+        # write). Every join and shuffle on that path is already explicitly
+        # engineered — broadcast / SHUFFLE_HASH hints, explicit skew salting,
+        # fixed shuffle partitions, repartitionByRange — so adaptive
+        # re-planning cannot change the strategy; it only multiplies the path
+        # into per-stage driver jobs, each a serial driver round-trip at 1000
+        # executors (measured: the rank collect alone submitted 11 jobs under
+        # AQE, 2 without). Race-free because the prefix runs before the
+        # round's thread pool spins up. The big variable-shape queries later
+        # in the round (discovery joins, frontier write) keep AQE.
+        with session_conf(spark, **{"spark.sql.adaptive.enabled": "false"}):
+            kept = politeness_topk_skew_aware(
+                eligible, cfg, state.heavy_hosts(round_no)
+            )
+            # optional registered-domain shared cap (SEMANTICS.md §Politeness):
+            # rides between the host cap and the global cap; host_kept is
+            # observed on the intermediate frame so budget_deferred /
+            # domain_deferred split without an extra count job
+            host_obs = None
+            if cfg.domain_budget:
+                from indigo_crawler_spark.operators.politeness import domain_topk
+
+                host_obs = Observation()
+                kept = domain_topk(
+                    kept.observe(host_obs, F.count(F.lit(1)).alias("host_kept")),
+                    cfg.domain_budget,
+                    cfg.num_salts,
+                )
+            kept = kept.cache()
+            with _timed(tm, "gates_rank_collect"):
+                emitted, n_kept, kept_pks, rank_cache = sequence_batches(
+                    kept, round_no, cfg.round_limit, cfg.batch_size,
+                    gather_col="pk", single_partition=rank_single,
+                )
+            n_emitted = min(n_kept, cfg.round_limit)
             from indigo_crawler_spark.operators.feedback import (
-                fold_backoff,
-                fold_fail_hosts,
-                fold_thin_hosts,
+                fetch_status_expr,
+                retry_exprs,
             )
 
-            budgets_next = budgets
-            if cfg.ban_every:
-                statuses = emitted.select("host", "status")
-                budgets_next = fold_backoff(budgets_next, statuses, round_no, cfg)
-            if failhost_on:
-                # dead-host backoff (SEMANTICS.md §Transient failures):
-                # failure-burst hosts pause like banned hosts; the
-                # triggered-host counter rides the budgets write. The
-                # greatest() fold commutes with fold_backoff's (same
-                # until), so ban/fail order is irrelevant.
-                failhost_obs = Observation()
-                budgets_next = (
-                    fold_fail_hosts(
-                        budgets_next,
-                        emitted.select("host", "status"),
-                        round_no,
-                        cfg,
+            # fetch status is SEMANTICS (SEMANTICS.md §Backoff / §Transient
+            # failures) — computed at ONE site on the cached emitted frame;
+            # fetch_batches, the A7 metrics rollup and the EP3 budget fold
+            # below all reuse the same column. With the retry knob on, the
+            # url's failure count so far joins first (committed state < R, one
+            # small join on the ≤K emitted slice) and salts the outcome draw.
+            if cfg.fail_every:
+                emitted = (
+                    emitted.join(
+                        state.retries_through(round_no).hint("SHUFFLE_HASH"),
+                        on="canon_url",
+                        how="left",
                     )
-                    .observe(
-                        failhost_obs,
-                        _sum0(F.col("_failhost")).alias("failhost"),
-                    )
-                    .drop("_failhost")
+                    .withColumn("_attempt", F.coalesce(F.col("fails"), F.lit(0)))
+                    .drop("fails")
                 )
-            if cfg.thin_host_min_words:
-                thin_obs = Observation()
-                budgets_next = (
-                    fold_thin_hosts(budgets_next, extracted, cfg)
-                    .observe(
-                        thin_obs,
-                        _sum0(F.col("_thin_demoted")).alias("thin"),
-                    )
-                    .drop("_thin_demoted")
+                emitted = emitted.withColumn(
+                    "status", fetch_status_expr(cfg, F.col("_attempt"))
+                ).cache()
+                rx = retry_exprs(
+                    F.col("status"), F.col("_attempt"), cfg.max_retries
                 )
-            def _w_budgets() -> None:
+                # "the url is DONE with the crawl": fetched (ok/banned) or
+                # retry-exhausted — the set that enters seen and leaves the
+                # frontier; retained failures stay behind for the next round
+                emitted_done = emitted.where(~rx["failed"] | rx["exhausted"])
+            else:
+                emitted = emitted.withColumn(
+                    "status", fetch_status_expr(cfg)
+                ).cache()
+                rx = None
+                emitted_done = emitted
+
+            fb_obs = Observation()
+            fb_metrics = [_sum0(F.col("status") == "banned").alias("banned")]
+            if rx is not None:
+                fb_metrics.append(_sum0(rx["failed"]).alias("fetch_failed"))
+                fb_metrics.append(_sum0(rx["exhausted"]).alias("retry_exhausted"))
+            fetch_batches = emitted.select(
+                "round", "batch_id", "canon_url", "host", "host_hash", "priority",
+                "rank_in_host", "global_rank", "status",
+                *(["_attempt"] if rx is not None else []),
+            ).observe(fb_obs, *fb_metrics)
+            fetch_batches = fetch_batches.drop("_attempt")
+        # rank_cache/kept stay persisted until END of round: every consumer of
+        # `emitted` (the fetch_batches write below, seen write, digest, metrics,
+        # budget fold, the extract join) computes through the caches, and on a
+        # real cluster a lost cache block triggers recompute through the ranker
+        # — which re-samples range bounds and would produce DIFFERENT ranks
+        # than the frozen offsets if rank_cache were already gone (silent
+        # divergence between committed tables). While rank_cache lives,
+        # recompute replays the exact partition layout the offsets were
+        # collected from. Residual (double-loss of both caches mid-round)
+        # surfaces as a digest-verify refusal on resume — fail-loud, never
+        # silent.
+        #
+        # K-bounded output sizing (r6 — guide §6 small-files): the emitted-slice
+        # tables (fetch_batches, seen delta, retries) inherit the ranker's
+        # shuffle-partition count, which writes one near-empty file per
+        # partition at small K and is still only a physical layout at large K —
+        # derive the file count from the known row bound instead (n_emitted is
+        # already on the driver; no extra action). ~200k rows/file keeps
+        # production-K rounds at a handful of right-sized files and small
+        # rounds at one.
+        out_parts = max(1, -(-n_emitted // 200_000))
+
+        pool = ThreadPoolExecutor(max_workers=5)
+        try:
+            # the fetch_batches write overlaps the (driver-side, lazy) plan
+            # construction of the extract/discovery stages below instead of
+            # blocking the main thread (r6): its input is the cached ranker
+            # output, so concurrent consumers of `emitted` just re-project from
+            # rank_cache until the cache fills — deterministic either way.
+            def _w_fb():
+                with _timed(tm, "fetch_batches_write"):
+                    io.write(
+                        fetch_batches.coalesce(out_parts),
+                        f"fetch_batches/round={round_no}",
+                    )
+
+            f_fb = pool.submit(_w_fb)
+            f_skew = pool.submit(_skew_fold)
+            # seen takes the DONE slice (SEMANTICS.md §Transient failures):
+            # fetched urls plus retry-exhausted give-ups; retained failures
+            # stay out of seen so the next round can re-emit them
+            seen_delta = emitted_done.select(
+                "canon_url",
+                url_hash_expr(F.col("canon_url")).alias("url_hash"),
+                F.col("pk"),
+                F.lit(round_no).alias("first_round"),
+            )
+            def _w_seen():
+                with _timed(tm, "seen_write"):
+                    io.write(seen_delta.coalesce(out_parts), f"seen/round={round_no}")
+
+            f_seen = pool.submit(_w_seen)
+
+            # A7 engine-side rollup metrics: (host, status) / (host) / () counts
+            # over the ≤K emitted rows — tiny cached-input job, off the critical
+            # path. The () grand total equals the `emitted` counter; per-host
+            # rows are a TABLE (round_metrics/round=R), not manifest JSON — at
+            # 50M hosts a manifest-embedded rollup would be absurd.
+            metrics = (
+                emitted.select("host", "status")
+                .rollup("host", "status")
+                .agg(F.count("*").alias("n"))
+            )
+            f_metrics = pool.submit(
+                io.write, metrics, f"round_metrics/round={round_no}"
+            )
+
+            # (the EP3 budget folds are submitted after the extract below —
+            # the thin-host fold reads the extracted slice)
+
+            # 5. fetch: emitted ⋈ page store — broadcast the ≤K emitted urls into
+            # the store scan so the 100 TB side never shuffles, and prune store
+            # buckets to the pks actually touched (partition pruning: at P=256 a
+            # typical round reads a fraction of the store's directories).
+            store = state.fetchable_store(kept_pks)
+            # strategy switch on the known emitted count: small rounds broadcast
+            # the url list into the scan; huge rounds (K in the millions) would
+            # serialize a giant broadcast build — shuffle-hash join instead (the
+            # store slice shuffles once; never sorted).
+            # failed fetches (SEMANTICS.md §Transient failures) yield no page:
+            # they never reach the store join, so no text, no links, no
+            # discovery — the where folds away when the knob is off
+            fetch_src = (
+                emitted.where(F.col("status") != "failed")
+                if rx is not None
+                else emitted
+            )
+            emitted_sel = fetch_src.select("canon_url", "depth")
+            small_round = n_emitted <= 200_000
+            if small_round:
+                fetched = store.join(
+                    F.broadcast(emitted_sel), on="canon_url", how="inner"
+                )
+            else:
+                fetched = store.join(
+                    emitted_sel.hint("SHUFFLE_HASH"), on="canon_url", how="inner"
+                )
+            ext_obs = Observation()
+            ext_metrics = [
+                F.count(F.lit(1)).alias("fetched_pages"),
+                F.coalesce(F.sum(F.size("links")), F.lit(0)).alias("links_extracted"),
+            ]
+            if cfg.meta_robots_enabled:
+                # links withheld by REP nofollow (SEMANTICS.md §Meta robots) —
+                # rides the same observe, zero extra jobs
+                ext_metrics.append(
+                    F.coalesce(
+                        F.sum(F.when(F.col("nofollow"), F.size("links")).otherwise(0)),
+                        F.lit(0),
+                    ).alias("nofollow_dropped")
+                )
+            if cfg.rel_canonical_enabled:
+                # pages declaring a canonical target other than themselves
+                # (SEMANTICS.md §Canonical link) — the export-time collapse set
+                ext_metrics.append(
+                    F.coalesce(
+                        F.sum(
+                            F.when(
+                                F.col("canonical_url").isNotNull()
+                                & (F.col("canonical_url") != F.col("canon_url")),
+                                1,
+                            ).otherwise(0)
+                        ),
+                        F.lit(0),
+                    ).alias("canonical_variants")
+                )
+            if cfg.meta_refresh_enabled:
+                # delay-0 pure redirects (SEMANTICS.md §Meta refresh) — the
+                # export-time drop set; the appended target already rides links
+                ext_metrics.append(
+                    F.coalesce(
+                        F.sum(F.col("redirect").cast("int")), F.lit(0)
+                    ).alias("refresh_redirects")
+                )
+            if cfg.anchor_nofollow_enabled:
+                # links withheld by anchor-level rel=nofollow (SEMANTICS.md
+                # §Anchor nofollow) — dropped at extraction, so links/
+                # links_extracted/discovery/link-graph all already exclude them
+                ext_metrics.append(
+                    F.coalesce(F.sum("anchor_dropped"), F.lit(0)).alias(
+                        "anchor_nofollow_dropped"
+                    )
+                )
+            if cfg.hreflang_enabled:
+                # alternate targets appended into links (SEMANTICS.md §Hreflang
+                # alternates) — already inside links_extracted; counted
+                # separately so operators see the discovery the signal buys
+                ext_metrics.append(
+                    F.coalesce(F.sum("hreflang_added"), F.lit(0)).alias(
+                        "hreflang_alternates"
+                    )
+                )
+            extracted = (
+                extract_pages(
+                    fetched,
+                    sitemap_aware=cfg.sitemaps_enabled,
+                    meta_robots=cfg.meta_robots_enabled,
+                    rel_canonical=cfg.rel_canonical_enabled,
+                    meta_refresh=cfg.meta_refresh_enabled,
+                    anchor_nofollow=cfg.anchor_nofollow_enabled,
+                    hreflang=cfg.hreflang_enabled,
+                    policy=cfg.canon_policy,
+                )
+                .observe(ext_obs, *ext_metrics)
+                .cache()
+            )
+            # REP nofollow (SEMANTICS.md §Meta robots): a nofollow page's
+            # out-links are withheld from BOTH the link graph and discovery —
+            # nofollow is an endorsement signal, so the edges pass no rank and
+            # the children are not admitted through this page. One lazy filter
+            # over the cached frame; folds away when the flag is off.
+            followable = (
+                extracted.where(~F.col("nofollow"))
+                if cfg.meta_robots_enabled
+                else extracted
+            )
+            # under meta_robots / rel_canonical the page-level indexing
+            # signals ride the text table so the corpus export can honor
+            # them; text bytes are unchanged either way
+            text_cols = ["canon_url", "text"]
+            if cfg.meta_robots_enabled:
+                text_cols.append("noindex")
+            if cfg.rel_canonical_enabled:
+                text_cols.append("canonical_url")
+            if cfg.meta_refresh_enabled:
+                text_cols.append("redirect")
+
+            # pooled (r6): the extract write — the Arrow parse pass that fills
+            # the `extracted` cache — overlaps the driver-side construction of
+            # the discovery plan below. Every OTHER reader of the extracted
+            # cache (links, thin-host fold, revisit, the discovery jobs) waits
+            # on this future first so exactly one task pays the parse; the pool
+            # has a free worker by submission order (at most fb/skew/seen/
+            # metrics are in flight, max_workers=5), so the future always
+            # RUNS rather than queuing behind its own waiters.
+            def _w_extract():
+                with _timed(tm, "extract_text_write"):
+                    io.write(
+                        extracted.select(*text_cols),
+                        f"fetched_text/round={round_no}",
+                    )
+
+            f_extract = pool.submit(_w_extract)
+
+            # link-graph edges (SEMANTICS.md §PageRank priority): every fetched
+            # page's out-links as (src, dst) rows — extraction facts, recorded
+            # BEFORE the depth cap and trap gate (those govern frontier
+            # admission, not the graph). Emitted-slice scale (≤K pages × avg
+            # out-degree), pooled off the critical path; reads the cached
+            # extracted frame, so it costs no second Arrow pass.
+            f_links = None
+            if cfg.pagerank_every:
+                links_edges = followable.select(
+                    F.col("canon_url").alias("src"),
+                    F.explode("links").alias("dst"),
+                )
+
+                def _w_links() -> None:
+                    f_extract.result()  # one parse: wait for the cache fill
+                    with _timed(tm, "links_write"):
+                        io.write(links_edges, f"links/round={round_no}")
+
+                f_links = pool.submit(_w_links)
+
+            # EP3 feedback folds into next round's budgets (versioned;
+            # deterministic ⇒ replay-safe), off the critical path and composed
+            # into ONE write: ban→backoff reads emitted's statuses from cache,
+            # thin-content demotion (SEMANTICS.md §Thin-host demotion) reads
+            # the cached extracted slice — its demoted-host counter rides the
+            # budgets write via Observation (zero extra jobs).
+            f_budgets = None
+            thin_obs = None
+            failhost_obs = None
+            failhost_on = bool(cfg.fail_every and cfg.fail_host_threshold)
+            if cfg.ban_every or cfg.thin_host_min_words or failhost_on:
+                from indigo_crawler_spark.operators.feedback import (
+                    fold_backoff,
+                    fold_fail_hosts,
+                    fold_thin_hosts,
+                )
+
+                budgets_next = budgets
+                if cfg.ban_every:
+                    statuses = emitted.select("host", "status")
+                    budgets_next = fold_backoff(budgets_next, statuses, round_no, cfg)
+                if failhost_on:
+                    # dead-host backoff (SEMANTICS.md §Transient failures):
+                    # failure-burst hosts pause like banned hosts; the
+                    # triggered-host counter rides the budgets write. The
+                    # greatest() fold commutes with fold_backoff's (same
+                    # until), so ban/fail order is irrelevant.
+                    failhost_obs = Observation()
+                    budgets_next = (
+                        fold_fail_hosts(
+                            budgets_next,
+                            emitted.select("host", "status"),
+                            round_no,
+                            cfg,
+                        )
+                        .observe(
+                            failhost_obs,
+                            _sum0(F.col("_failhost")).alias("failhost"),
+                        )
+                        .drop("_failhost")
+                    )
                 if cfg.thin_host_min_words:
-                    f_extract.result()  # thin fold reads the extracted cache
-                io.write(budgets_next, f"host_budgets/round={round_no + 1}")
+                    thin_obs = Observation()
+                    budgets_next = (
+                        fold_thin_hosts(budgets_next, extracted, cfg)
+                        .observe(
+                            thin_obs,
+                            _sum0(F.col("_thin_demoted")).alias("thin"),
+                        )
+                        .drop("_thin_demoted")
+                    )
+                def _w_budgets() -> None:
+                    if cfg.thin_host_min_words:
+                        f_extract.result()  # thin fold reads the extracted cache
+                    io.write(budgets_next, f"host_budgets/round={round_no + 1}")
 
-            f_budgets = pool.submit(_w_budgets)
+                f_budgets = pool.submit(_w_budgets)
 
-        # lifetime emit-totals fold (SEMANTICS.md §Host page cap): previous
-        # totals ∪ this round's per-host emitted counts, ONE hash agg over
-        # (host-scale dimension + ≤K cached rows), versioned like the
-        # budgets fold — next round's gate clips against it. Deterministic
-        # ⇒ replay-safe; pooled off the critical path.
-        f_emitcap = None
-        if cfg.host_page_cap:
-            per_host = emitted.groupBy("host").agg(
-                F.count("*").cast("long").alias("emitted_total")
-            )
-            totals_next = (
-                emitted_totals.unionByName(per_host)
-                .groupBy("host")
-                .agg(F.sum("emitted_total").alias("emitted_total"))
-            )
-            f_emitcap = pool.submit(
-                io.write, totals_next, f"host_emitted/round={round_no + 1}"
-            )
-
-        # adaptive-recrawl freshness fold (SEMANTICS.md §Adaptive recrawl):
-        # digest the ≤K fetched texts, derive next intervals against the
-        # committed revisit state (< round_no — the concurrent writes below
-        # never touch it), append revisit/round=R. Counters ride the write's
-        # Observation (zero extra jobs); compaction chains INSIDE the same
-        # pooled task because the snapshot read includes the delta just
-        # written. Same replay story as every versioned table: deterministic
-        # content, overwritten bit-exactly on an uncommitted-round re-run.
-        f_revisit, rv_obs = None, None
-        if cfg.recrawl_after and cfg.recrawl_adaptive:
-            from indigo_crawler_spark.operators.recrawl import revisit_delta
-
-            rv_obs = Observation()
-            rv_rows = (
-                revisit_delta(state, extracted, round_no)
-                .observe(
-                    rv_obs,
-                    _sum0(F.col("_prev_seen") & ~F.col("_changed")).alias(
-                        "unchanged"
-                    ),
-                    _sum0(F.col("_changed")).alias("changed"),
+            # lifetime emit-totals fold (SEMANTICS.md §Host page cap): previous
+            # totals ∪ this round's per-host emitted counts, ONE hash agg over
+            # (host-scale dimension + ≤K cached rows), versioned like the
+            # budgets fold — next round's gate clips against it. Deterministic
+            # ⇒ replay-safe; pooled off the critical path.
+            f_emitcap = None
+            if cfg.host_page_cap:
+                per_host = emitted.groupBy("host").agg(
+                    F.count("*").cast("long").alias("emitted_total")
                 )
-                .drop("_prev_seen", "_changed")
-            )
+                totals_next = (
+                    emitted_totals.unionByName(per_host)
+                    .groupBy("host")
+                    .agg(F.sum("emitted_total").alias("emitted_total"))
+                )
+                f_emitcap = pool.submit(
+                    io.write, totals_next, f"host_emitted/round={round_no + 1}"
+                )
 
-            def _w_revisit() -> None:
-                f_extract.result()  # revisit_delta reads the extracted cache
-                with _timed(tm, "revisit_write"):
-                    io.write(rv_rows, f"revisit/round={round_no}")
-                if (
-                    cfg.seen_compact_every
-                    and (round_no + 1) % cfg.seen_compact_every == 0
-                    and not io.is_complete(f"revisit_compact/upto={round_no}")
-                ):
-                    with _timed(tm, "revisit_compact"):
+            # adaptive-recrawl freshness fold (SEMANTICS.md §Adaptive recrawl):
+            # digest the ≤K fetched texts, derive next intervals against the
+            # committed revisit state (< round_no — the concurrent writes below
+            # never touch it), append revisit/round=R. Counters ride the write's
+            # Observation (zero extra jobs); compaction chains INSIDE the same
+            # pooled task because the snapshot read includes the delta just
+            # written. Same replay story as every versioned table: deterministic
+            # content, overwritten bit-exactly on an uncommitted-round re-run.
+            f_revisit, rv_obs = None, None
+            if cfg.recrawl_after and cfg.recrawl_adaptive:
+                from indigo_crawler_spark.operators.recrawl import revisit_delta
+
+                rv_obs = Observation()
+                rv_rows = (
+                    revisit_delta(state, extracted, round_no)
+                    .observe(
+                        rv_obs,
+                        _sum0(F.col("_prev_seen") & ~F.col("_changed")).alias(
+                            "unchanged"
+                        ),
+                        _sum0(F.col("_changed")).alias("changed"),
+                    )
+                    .drop("_prev_seen", "_changed")
+                )
+
+                def _w_revisit() -> None:
+                    f_extract.result()  # revisit_delta reads the extracted cache
+                    with _timed(tm, "revisit_write"):
+                        io.write(rv_rows, f"revisit/round={round_no}")
+                    if (
+                        cfg.seen_compact_every
+                        and (round_no + 1) % cfg.seen_compact_every == 0
+                        and not io.is_complete(f"revisit_compact/upto={round_no}")
+                    ):
+                        with _timed(tm, "revisit_compact"):
+                            io.write(
+                                state.revisit_through(round_no + 1).repartition(
+                                    cfg.num_buckets, "pk"
+                                ),
+                                f"revisit_compact/upto={round_no}",
+                            )
+
+                f_revisit = pool.submit(_w_revisit)
+
+            # transient-failure retry delta (SEMANTICS.md §Transient failures):
+            # the urls that failed THIS round and stay retryable, each with its
+            # bumped lifetime failure count — read back (max per url) by round
+            # R+1's status join. ≤K rows, pooled, knob-off writes nothing.
+            f_retries, retry_rows = None, None
+            if rx is not None:
+                retry_rows = emitted.where(rx["retained"]).select(
+                    "canon_url", rx["fails_next"].alias("fails"), "pk"
+                )
+
+                def _w_retries() -> None:
+                    with _timed(tm, "retries_write"):
                         io.write(
-                            state.revisit_through(round_no + 1).repartition(
-                                cfg.num_buckets, "pk"
-                            ),
-                            f"revisit_compact/upto={round_no}",
+                            retry_rows.coalesce(out_parts),
+                            f"retries/round={round_no}",
                         )
 
-            f_revisit = pool.submit(_w_revisit)
+                f_retries = pool.submit(_w_retries)
 
-        # transient-failure retry delta (SEMANTICS.md §Transient failures):
-        # the urls that failed THIS round and stay retryable, each with its
-        # bumped lifetime failure count — read back (max per url) by round
-        # R+1's status join. ≤K rows, pooled, knob-off writes nothing.
-        f_retries, retry_rows = None, None
-        if rx is not None:
-            retry_rows = emitted.where(rx["retained"]).select(
-                "canon_url", rx["fails_next"].alias("fails"), "pk"
-            )
+            f_seen.result()
+            # A4/A6: fold this round's seen delta into the cumulative membership
+            # filter (bloom: pure bitwise OR; cuckoo: fingerprint re-insert — the
+            # deletable variant). Built from the in-memory delta (content-equal
+            # to the just-committed files), overlapped with discovery below.
+            prev_filter = f"seen_bloom/round={round_no - 1}"
 
-            def _w_retries() -> None:
-                with _timed(tm, "retries_write"):
-                    io.write(
-                        retry_rows.coalesce(out_parts),
-                        f"retries/round={round_no}",
+            def _fold_filter() -> None:
+                with _timed(tm, "filter_fold"):
+                    _fold_filter_inner()
+
+            def _fold_filter_inner() -> None:
+                if cfg.filter_kind == "bloom":
+                    from indigo_crawler_spark.operators.bloom_ops import (
+                        bloom_geometry,
+                        build_bloom_delta,
+                        fold_bloom,
                     )
 
-            f_retries = pool.submit(_w_retries)
+                    nbits, k = bloom_geometry(state.filter_capacity(), cfg.bloom_fpr)
+                    if round_no > 0 and io.exists(prev_filter):
+                        # fused build+OR-merge: one cogrouped Python stage and
+                        # one pk shuffle of the raw delta instead of the old
+                        # build-then-merge pair (bit-identical — OR commutes)
+                        io.write(
+                            fold_bloom(
+                                io.read(prev_filter, schemas.SEEN_BLOOM),
+                                seen_delta,
+                                nbits,
+                                k,
+                            ),
+                            f"seen_bloom/round={round_no}",
+                        )
+                        return
+                    delta_f = build_bloom_delta(seen_delta, nbits, k)
+                    merge = None
+                else:
+                    from indigo_crawler_spark.operators.cuckoo_ops import (
+                        build_cuckoo_delta,
+                        cuckoo_geometry,
+                        merge_cuckoos,
+                    )
 
-        f_seen.result()
-        # A4/A6: fold this round's seen delta into the cumulative membership
-        # filter (bloom: pure bitwise OR; cuckoo: fingerprint re-insert — the
-        # deletable variant). Built from the in-memory delta (content-equal
-        # to the just-committed files), overlapped with discovery below.
-        prev_filter = f"seen_bloom/round={round_no - 1}"
-
-        def _fold_filter() -> None:
-            with _timed(tm, "filter_fold"):
-                _fold_filter_inner()
-
-        def _fold_filter_inner() -> None:
-            if cfg.filter_kind == "bloom":
-                from indigo_crawler_spark.operators.bloom_ops import (
-                    bloom_geometry,
-                    build_bloom_delta,
-                    fold_bloom,
-                )
-
-                nbits, k = bloom_geometry(state.filter_capacity(), cfg.bloom_fpr)
+                    nbuckets, _ = cuckoo_geometry(state.filter_capacity())
+                    delta_f = build_cuckoo_delta(seen_delta, nbuckets)
+                    merge = merge_cuckoos
                 if round_no > 0 and io.exists(prev_filter):
-                    # fused build+OR-merge: one cogrouped Python stage and
-                    # one pk shuffle of the raw delta instead of the old
-                    # build-then-merge pair (bit-identical — OR commutes)
-                    io.write(
-                        fold_bloom(
-                            io.read(prev_filter, schemas.SEEN_BLOOM),
-                            seen_delta,
-                            nbits,
-                            k,
+                    cumulative = merge(io.read(prev_filter, schemas.SEEN_BLOOM), delta_f)
+                else:
+                    cumulative = delta_f
+                io.write(cumulative, f"seen_bloom/round={round_no}")
+
+            f_filter = (
+                pool.submit(_fold_filter)
+                if cfg.filter_kind in ("bloom", "cuckoo")
+                else None
+            )
+
+            # compaction: fold the delta chain into one pk-clustered snapshot so
+            # the exact-membership read stays O(1 snapshot + few deltas) at any
+            # round count. Replay safety: skip if a prior (killed-after-
+            # compaction) attempt already committed this snapshot — content is
+            # deterministic, and rewriting would read seen_compact/upto=R while
+            # overwriting it. A half-written dir (no _SUCCESS) is excluded by
+            # _compact_uptos, so the rebuild reads only deltas and safely
+            # overwrites it.
+            f_compact = None
+            if (
+                cfg.seen_compact_every
+                and (round_no + 1) % cfg.seen_compact_every == 0
+                and not io.is_complete(f"seen_compact/upto={round_no}")
+            ):
+                f_compact = pool.submit(
+                    lambda: io.write(
+                        state.seen_through(round_no + 1).repartition(
+                            cfg.num_buckets, "pk"
                         ),
-                        f"seen_bloom/round={round_no}",
+                        f"seen_compact/upto={round_no}",
                     )
-                    return
-                delta_f = build_bloom_delta(seen_delta, nbits, k)
-                merge = None
+                )
+
+            # 6. discover children: explode → min-depth dedup → not in seen'/frontier'
+            children = followable.where(F.col("depth") + 1 <= cfg.max_depth).select(
+                F.explode("links").alias("canon_url"),
+                (F.col("depth") + 1).cast("int").alias("depth"),
+            )
+            # trap / pattern-excluded / extension-denied children never enter
+            # the frontier (SEMANTICS.md §Traps / §Exclude patterns /
+            # §Extension deny) — dropping an unbounded URL family at discovery
+            # beats re-gating it every round; all three exprs fold to
+            # lit(False) when their gate is off. Non-allowed-host children
+            # likewise (SEMANTICS.md §Host allow-list) — the host expr is
+            # recomputed here (children carry no host column yet). All of these
+            # trees are round-invariant ⇒ cached (_child_exprs, r6).
+            cx = _child_exprs(cfg)
+            children = children.where(cx["gate"])
+            children = dedup_min_by(children, "canon_url", ["depth"]).withColumn(
+                "host", cx["host"]
+            )
+            # host-capped children never enter the frontier (SEMANTICS.md §Host
+            # page cap): the capped set is derived from the SAME totals table
+            # the gate used (entering this round), so a host crossing the cap
+            # DURING this round still admits this round's children — they leave
+            # permanently at the next gate. One host-keyed anti-join, knob-off
+            # free.
+            if cfg.host_page_cap:
+                capped_hosts = emitted_totals.where(
+                    F.col("emitted_total") >= F.lit(int(cfg.host_page_cap))
+                ).select("host")
+                children = children.join(
+                    capped_hosts.hint("SHUFFLE_HASH"), on="host", how="left_anti"
+                )
+            children = children.withColumn("pk", cx["pk"])
+
+            seen_prev = state.seen_through(round_no)
+
+            # frontier advance off the cached gate frame — denied rows leave by
+            # FILTER (no anti-join against a recomputed denied side), emitted
+            # rows by one bounded-side join. Join strategy (10^10 scale): emitted
+            # is bounded by K → broadcast; frontier/seen/host_counts are
+            # frontier-scale → SHUFFLE_HASH (broadcast builds would serialize).
+            allowed_rows = gated.where(gx["not_denied"])
+            # the frontier sheds the DONE slice only — retained transient
+            # failures stay for re-emission (SEMANTICS.md §Transient failures)
+            emitted_urls = emitted_done.select("canon_url")
+            if not small_round:
+                emitted_urls = emitted_urls.hint("SHUFFLE_HASH")
             else:
-                from indigo_crawler_spark.operators.cuckoo_ops import (
-                    build_cuckoo_delta,
-                    cuckoo_geometry,
-                    merge_cuckoos,
-                )
+                emitted_urls = F.broadcast(emitted_urls)
+            remaining = allowed_rows.select(
+                *[f.name for f in schemas.FRONTIER.fields]
+            ).join(emitted_urls, on="canon_url", how="left_anti")
 
-                nbuckets, _ = cuckoo_geometry(state.filter_capacity())
-                delta_f = build_cuckoo_delta(seen_delta, nbuckets)
-                merge = merge_cuckoos
-            if round_no > 0 and io.exists(prev_filter):
-                cumulative = merge(io.read(prev_filter, schemas.SEEN_BLOOM), delta_f)
+            # children must not already be in seen OR in (remaining ∪ emitted)
+            # = allowed. Seen check: Bloom/cuckoo prefilter (A5) in front of
+            # the exact anti-join (J1). No false negatives ⇒ only the
+            # maybe_seen sliver touches the full seen table; the certainly-new
+            # bulk skips it (this is what keeps the 10^10 seen set off the
+            # per-round shuffle). Probes round R-1's committed filter —
+            # unaffected by the round-R fold running concurrently above.
+            # Scale-adaptive (r6, guide §1.2/§3.2): while the committed seen
+            # set is small — cheap to count from the round manifests, no Spark
+            # job — the probe's two cogrouped Python stages cost more than
+            # simply folding seen into the one exact anti-join every child
+            # already pays against the not-denied frontier (anti-joins against
+            # unioned sides compose: anti(anti(C,A),B) = anti(C, A ∪ B)), so
+            # the exact path runs one SHUFFLE_HASH anti-join total. The filter
+            # fold above still commits every round either way (resume/state
+            # are path-independent); results are identical by the
+            # no-false-negative property. Threshold: the probe pays off once
+            # scanning+shuffling the seen table dwarfs two fixed Python-stage
+            # launches — ~5M rows is conservative on any hardware.
+            frontier_not_denied = allowed_rows.select("canon_url")
+            use_probe = (
+                cfg.filter_kind in ("bloom", "cuckoo")
+                and round_no > 0
+                and io.exists(prev_filter)
+                and state.seen_rows_committed(round_no) >= _PROBE_MIN_SEEN
+            )
+            if use_probe:
+                children_h = children.withColumn(
+                    "url_hash", url_hash_expr(F.col("canon_url"))
+                )
+                filters = io.read(prev_filter, schemas.SEEN_BLOOM)
+                if cfg.filter_kind == "bloom":
+                    from indigo_crawler_spark.operators.bloom_ops import probe_split
+
+                    certainly_new, maybe_seen = probe_split(children_h, filters)
+                else:
+                    from indigo_crawler_spark.operators.cuckoo_ops import (
+                        probe_split_cuckoo,
+                    )
+
+                    certainly_new, maybe_seen = probe_split_cuckoo(children_h, filters)
+                survivors = maybe_seen.join(
+                    seen_prev.select("canon_url"), on="canon_url", how="left_anti"
+                )
+                children_pre = (
+                    certainly_new.unionByName(survivors)
+                    .drop("url_hash")
+                    .join(
+                        frontier_not_denied.hint("SHUFFLE_HASH"),
+                        on="canon_url",
+                        how="left_anti",
+                    )
+                )
             else:
-                cumulative = delta_f
-            io.write(cumulative, f"seen_bloom/round={round_no}")
-
-        f_filter = (
-            pool.submit(_fold_filter)
-            if cfg.filter_kind in ("bloom", "cuckoo")
-            else None
-        )
-
-        # compaction: fold the delta chain into one pk-clustered snapshot so
-        # the exact-membership read stays O(1 snapshot + few deltas) at any
-        # round count. Replay safety: skip if a prior (killed-after-
-        # compaction) attempt already committed this snapshot — content is
-        # deterministic, and rewriting would read seen_compact/upto=R while
-        # overwriting it. A half-written dir (no _SUCCESS) is excluded by
-        # _compact_uptos, so the rebuild reads only deltas and safely
-        # overwrites it.
-        f_compact = None
-        if (
-            cfg.seen_compact_every
-            and (round_no + 1) % cfg.seen_compact_every == 0
-            and not io.is_complete(f"seen_compact/upto={round_no}")
-        ):
-            f_compact = pool.submit(
-                lambda: io.write(
-                    state.seen_through(round_no + 1).repartition(
-                        cfg.num_buckets, "pk"
-                    ),
-                    f"seen_compact/upto={round_no}",
+                barrier = seen_prev.select("canon_url").unionByName(
+                    frontier_not_denied
                 )
-            )
-
-        # 6. discover children: explode → min-depth dedup → not in seen'/frontier'
-        children = followable.where(F.col("depth") + 1 <= cfg.max_depth).select(
-            F.explode("links").alias("canon_url"),
-            (F.col("depth") + 1).cast("int").alias("depth"),
-        )
-        # trap / pattern-excluded / extension-denied children never enter
-        # the frontier (SEMANTICS.md §Traps / §Exclude patterns /
-        # §Extension deny) — dropping an unbounded URL family at discovery
-        # beats re-gating it every round; all three exprs fold to
-        # lit(False) when their gate is off. Non-allowed-host children
-        # likewise (SEMANTICS.md §Host allow-list) — the host expr is
-        # recomputed here (children carry no host column yet). All of these
-        # trees are round-invariant ⇒ cached (_child_exprs, r6).
-        cx = _child_exprs(cfg)
-        children = children.where(cx["gate"])
-        children = dedup_min_by(children, "canon_url", ["depth"]).withColumn(
-            "host", cx["host"]
-        )
-        # host-capped children never enter the frontier (SEMANTICS.md §Host
-        # page cap): the capped set is derived from the SAME totals table
-        # the gate used (entering this round), so a host crossing the cap
-        # DURING this round still admits this round's children — they leave
-        # permanently at the next gate. One host-keyed anti-join, knob-off
-        # free.
-        if cfg.host_page_cap:
-            capped_hosts = emitted_totals.where(
-                F.col("emitted_total") >= F.lit(int(cfg.host_page_cap))
-            ).select("host")
-            children = children.join(
-                capped_hosts.hint("SHUFFLE_HASH"), on="host", how="left_anti"
-            )
-        children = children.withColumn("pk", cx["pk"])
-
-        seen_prev = state.seen_through(round_no)
-
-        # frontier advance off the cached gate frame — denied rows leave by
-        # FILTER (no anti-join against a recomputed denied side), emitted
-        # rows by one bounded-side join. Join strategy (10^10 scale): emitted
-        # is bounded by K → broadcast; frontier/seen/host_counts are
-        # frontier-scale → SHUFFLE_HASH (broadcast builds would serialize).
-        allowed_rows = gated.where(gx["not_denied"])
-        # the frontier sheds the DONE slice only — retained transient
-        # failures stay for re-emission (SEMANTICS.md §Transient failures)
-        emitted_urls = emitted_done.select("canon_url")
-        if not small_round:
-            emitted_urls = emitted_urls.hint("SHUFFLE_HASH")
-        else:
-            emitted_urls = F.broadcast(emitted_urls)
-        remaining = allowed_rows.select(
-            *[f.name for f in schemas.FRONTIER.fields]
-        ).join(emitted_urls, on="canon_url", how="left_anti")
-
-        # children must not already be in seen OR in (remaining ∪ emitted)
-        # = allowed. Seen check: Bloom/cuckoo prefilter (A5) in front of
-        # the exact anti-join (J1). No false negatives ⇒ only the
-        # maybe_seen sliver touches the full seen table; the certainly-new
-        # bulk skips it (this is what keeps the 10^10 seen set off the
-        # per-round shuffle). Probes round R-1's committed filter —
-        # unaffected by the round-R fold running concurrently above.
-        # Scale-adaptive (r6, guide §1.2/§3.2): while the committed seen
-        # set is small — cheap to count from the round manifests, no Spark
-        # job — the probe's two cogrouped Python stages cost more than
-        # simply folding seen into the one exact anti-join every child
-        # already pays against the not-denied frontier (anti-joins against
-        # unioned sides compose: anti(anti(C,A),B) = anti(C, A ∪ B)), so
-        # the exact path runs one SHUFFLE_HASH anti-join total. The filter
-        # fold above still commits every round either way (resume/state
-        # are path-independent); results are identical by the
-        # no-false-negative property. Threshold: the probe pays off once
-        # scanning+shuffling the seen table dwarfs two fixed Python-stage
-        # launches — ~5M rows is conservative on any hardware.
-        frontier_not_denied = allowed_rows.select("canon_url")
-        use_probe = (
-            cfg.filter_kind in ("bloom", "cuckoo")
-            and round_no > 0
-            and io.exists(prev_filter)
-            and state.seen_rows_committed(round_no) >= _PROBE_MIN_SEEN
-        )
-        if use_probe:
-            children_h = children.withColumn(
-                "url_hash", url_hash_expr(F.col("canon_url"))
-            )
-            filters = io.read(prev_filter, schemas.SEEN_BLOOM)
-            if cfg.filter_kind == "bloom":
-                from indigo_crawler_spark.operators.bloom_ops import probe_split
-
-                certainly_new, maybe_seen = probe_split(children_h, filters)
-            else:
-                from indigo_crawler_spark.operators.cuckoo_ops import (
-                    probe_split_cuckoo,
+                children_pre = children.join(
+                    barrier.hint("SHUFFLE_HASH"), on="canon_url", how="left_anti"
                 )
 
-                certainly_new, maybe_seen = probe_split_cuckoo(children_h, filters)
-            survivors = maybe_seen.join(
-                seen_prev.select("canon_url"), on="canon_url", how="left_anti"
+            hc = io.read("host_counts", schemas.HOST_COUNTS, cached=True)
+            hc_side = (
+                F.broadcast(hc) if small_host_dim else hc.hint("SHUFFLE_HASH")
             )
-            children_pre = (
-                certainly_new.unionByName(survivors)
-                .drop("url_hash")
-                .join(
-                    frontier_not_denied.hint("SHUFFLE_HASH"),
-                    on="canon_url",
-                    how="left_anti",
+            children_full = (
+                children_pre
+                .join(hc_side, on="host", how="left")
+                .withColumn("host_count", cx["host_count0"])
+                .select(
+                    "canon_url",
+                    "host",
+                    cx["host_hash"],
+                    cx["child_pk"],
+                    "depth",
+                    cx["seed_rank"],
+                    cx["priority"],
+                    F.lit(round_no + 1).alias("discovered_round"),
                 )
             )
-        else:
-            barrier = seen_prev.select("canon_url").unionByName(
-                frontier_not_denied
-            )
-            children_pre = children.join(
-                barrier.hint("SHUFFLE_HASH"), on="canon_url", how="left_anti"
-            )
+            frontier_next = remaining.unionByName(children_full)
 
-        hc = io.read("host_counts", schemas.HOST_COUNTS, cached=True)
-        hc_side = (
-            F.broadcast(hc) if small_host_dim else hc.hint("SHUFFLE_HASH")
-        )
-        children_full = (
-            children_pre
-            .join(hc_side, on="host", how="left")
-            .withColumn("host_count", cx["host_count0"])
-            .select(
-                "canon_url",
-                "host",
-                cx["host_hash"],
-                cx["child_pk"],
-                "depth",
-                cx["seed_rank"],
-                cx["priority"],
-                F.lit(round_no + 1).alias("discovered_round"),
-            )
-        )
-        frontier_next = remaining.unionByName(children_full)
+            # PageRank tick (SEMANTICS.md §PageRank priority): every
+            # pagerank_every-th outgoing frontier is re-scored with fixed-point
+            # integer ranks over the link graph accumulated through THIS round.
+            # The rescored priorities are what frontier/round=R+1 commits, so
+            # every downstream consumer — next round's gates, fetch_batches,
+            # resume — sees one consistent ordering, and a crash-replay of this
+            # round re-derives bit-identical ranks (integer sums are
+            # order-independent; kernels/pagerank.py). Tick-cadence cost: one
+            # graph pass + two SHUFFLE_HASH joins, never per-round.
+            if cfg.pagerank_every and (round_no + 1) % cfg.pagerank_every == 0:
+                from indigo_crawler_spark.operators.pagerank import (
+                    pagerank_int,
+                    rescore_frontier,
+                )
 
-        # PageRank tick (SEMANTICS.md §PageRank priority): every
-        # pagerank_every-th outgoing frontier is re-scored with fixed-point
-        # integer ranks over the link graph accumulated through THIS round.
-        # The rescored priorities are what frontier/round=R+1 commits, so
-        # every downstream consumer — next round's gates, fetch_batches,
-        # resume — sees one consistent ordering, and a crash-replay of this
-        # round re-derives bit-identical ranks (integer sums are
-        # order-independent; kernels/pagerank.py). Tick-cadence cost: one
-        # graph pass + two SHUFFLE_HASH joins, never per-round.
-        if cfg.pagerank_every and (round_no + 1) % cfg.pagerank_every == 0:
-            from indigo_crawler_spark.operators.pagerank import (
-                pagerank_int,
-                rescore_frontier,
-            )
+                if f_links is not None:
+                    f_links.result()
+                with _timed(tm, "pagerank_tick"):
+                    edges = state.links_through(round_no)
+                    # fold the delta chain into one snapshot when it grows past
+                    # the compaction cadence (same discipline as seen_compact;
+                    # physical-only — identical rows, identical ranks). The tick
+                    # already reads the whole chain, so the fold rides it.
+                    # Replay-safe: a killed-after-fold re-run sees the complete
+                    # snapshot and skips; a half-written dir (no _SUCCESS) is
+                    # ignored by _links_compact_uptos and safely overwritten.
+                    if (
+                        cfg.seen_compact_every
+                        and state.links_delta_dirs_after_compact(round_no)
+                        >= cfg.seen_compact_every
+                        and not io.is_complete(f"links_compact/upto={round_no}")
+                    ):
+                        io.write(edges, f"links_compact/upto={round_no}")
+                        edges = state.links_through(round_no)
+                    pr_ranks = pagerank_int(edges, iters=cfg.pagerank_iters)
+                    io.write(pr_ranks, f"pagerank/round={round_no + 1}")
+                    frontier_next = rescore_frontier(
+                        frontier_next, pr_ranks, hc, cfg.pagerank_weight
+                    )
 
+            fn_obs = Observation()
+            frontier_next = frontier_next.observe(
+                fn_obs,
+                _sum0(F.col("discovered_round") == round_no + 1).alias("links_new"),
+            ).cache()
+            # discovery executes over the extracted cache — ensure the pooled
+            # parse finished so the frontier-write job never re-parses
+            f_extract.result()
+            with _timed(tm, "discover_frontier_write"):
+                io.write(frontier_next, f"frontier/round={round_no + 1}")
+
+            # C3 — ONE digest job for BOTH committed tables (round-4 serial-floor
+            # cut: previously the seen digest re-read its committed dir and the
+            # frontier digest re-read frontier/round=R+1 — two extra scan jobs
+            # per round; at a 10^10-row frontier the re-read alone is a full I/O
+            # pass). Both frames are in memory — seen_delta projects the cached
+            # emitted frame, frontier_next was just materialized by its write —
+            # and the writes are deterministic projections of exactly these
+            # frames, so digest-of-intent equals digest-of-file; the footer
+            # cross-check before the manifest commit (below) catches a write
+            # that failed to materialize them, and resume's verify_table
+            # re-reads the FILES for full content verification. Round-5
+            # serial-floor cut: the digest job overlaps the still-draining
+            # filter/compact/budget/metrics futures on the pool instead of
+            # sitting serially between the frontier write and the joins — it
+            # reads only cached frames, so ordering is free.
+            from indigo_crawler_spark.plans.lineage import tables_digest
+
+            def _digest() -> dict:
+                frames = {"seen": seen_delta, "frontier_next": frontier_next}
+                if retry_rows is not None:
+                    frames["retries"] = retry_rows
+                with _timed(tm, "tables_digest"):
+                    return tables_digest(frames)
+
+            f_digest = pool.submit(_digest)
+            if f_filter is not None:
+                f_filter.result()
+            if f_compact is not None:
+                f_compact.result()
+            if f_budgets is not None:
+                f_budgets.result()
             if f_links is not None:
                 f_links.result()
-            with _timed(tm, "pagerank_tick"):
-                edges = state.links_through(round_no)
-                # fold the delta chain into one snapshot when it grows past
-                # the compaction cadence (same discipline as seen_compact;
-                # physical-only — identical rows, identical ranks). The tick
-                # already reads the whole chain, so the fold rides it.
-                # Replay-safe: a killed-after-fold re-run sees the complete
-                # snapshot and skips; a half-written dir (no _SUCCESS) is
-                # ignored by _links_compact_uptos and safely overwritten.
-                if (
-                    cfg.seen_compact_every
-                    and state.links_delta_dirs_after_compact(round_no)
-                    >= cfg.seen_compact_every
-                    and not io.is_complete(f"links_compact/upto={round_no}")
-                ):
-                    io.write(edges, f"links_compact/upto={round_no}")
-                    edges = state.links_through(round_no)
-                pr_ranks = pagerank_int(edges, iters=cfg.pagerank_iters)
-                io.write(pr_ranks, f"pagerank/round={round_no + 1}")
-                frontier_next = rescore_frontier(
-                    frontier_next, pr_ranks, hc, cfg.pagerank_weight
-                )
-
-        fn_obs = Observation()
-        frontier_next = frontier_next.observe(
-            fn_obs,
-            _sum0(F.col("discovered_round") == round_no + 1).alias("links_new"),
-        ).cache()
-        # discovery executes over the extracted cache — ensure the pooled
-        # parse finished so the frontier-write job never re-parses
-        f_extract.result()
-        with _timed(tm, "discover_frontier_write"):
-            io.write(frontier_next, f"frontier/round={round_no + 1}")
-
-        # C3 — ONE digest job for BOTH committed tables (round-4 serial-floor
-        # cut: previously the seen digest re-read its committed dir and the
-        # frontier digest re-read frontier/round=R+1 — two extra scan jobs
-        # per round; at a 10^10-row frontier the re-read alone is a full I/O
-        # pass). Both frames are in memory — seen_delta projects the cached
-        # emitted frame, frontier_next was just materialized by its write —
-        # and the writes are deterministic projections of exactly these
-        # frames, so digest-of-intent equals digest-of-file; the footer
-        # cross-check before the manifest commit (below) catches a write
-        # that failed to materialize them, and resume's verify_table
-        # re-reads the FILES for full content verification. Round-5
-        # serial-floor cut: the digest job overlaps the still-draining
-        # filter/compact/budget/metrics futures on the pool instead of
-        # sitting serially between the frontier write and the joins — it
-        # reads only cached frames, so ordering is free.
-        from indigo_crawler_spark.plans.lineage import tables_digest
-
-        def _digest() -> dict:
-            frames = {"seen": seen_delta, "frontier_next": frontier_next}
-            if retry_rows is not None:
-                frames["retries"] = retry_rows
-            with _timed(tm, "tables_digest"):
-                return tables_digest(frames)
-
-        f_digest = pool.submit(_digest)
-        if f_filter is not None:
-            f_filter.result()
-        if f_compact is not None:
-            f_compact.result()
-        if f_budgets is not None:
-            f_budgets.result()
-        if f_links is not None:
-            f_links.result()
-        if f_revisit is not None:
-            f_revisit.result()
-        if f_retries is not None:
-            f_retries.result()
-        if f_emitcap is not None:
-            f_emitcap.result()
-        f_fb.result()
-        f_extract.result()
-        f_metrics.result()
-        digests = f_digest.result()
-        max_host_cand, n_heavy_next = f_skew.result()
-    finally:
-        pool.shutdown(wait=True)
-        if _aqe_prev is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
-        if _shuf_prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _shuf_prev)
+            if f_revisit is not None:
+                f_revisit.result()
+            if f_retries is not None:
+                f_retries.result()
+            if f_emitcap is not None:
+                f_emitcap.result()
+            f_fb.result()
+            f_extract.result()
+            f_metrics.result()
+            digests = f_digest.result()
+            max_host_cand, n_heavy_next = f_skew.result()
+        finally:
+            pool.shutdown(wait=True)
 
     host_kept = _obs_int(host_obs, "host_kept") if host_obs is not None else n_kept
     counters = {

@@ -44,14 +44,7 @@ def ingest_pages(batch_df: DataFrame, state: CrawlState) -> None:
     pc = (
         batch_df.withColumn(
             "canon_url",
-            make_canonicalize_udf(
-                cfg.strip_tracking_enabled,
-                cfg.collapse_www_enabled,
-                cfg.sort_query_enabled,
-                cfg.strip_session_enabled,
-                cfg.prefer_https_enabled,
-                cfg.collapse_index_enabled,
-            )(F.col("url")),
+            make_canonicalize_udf(cfg.canon_policy)(F.col("url")),
         )
         .where(F.col("canon_url").isNotNull())
         .withColumn("host", host_expr("canon_url"))

@@ -17,7 +17,7 @@ from dataclasses import dataclass, field
 from urllib.parse import urlsplit
 
 from indigo_crawler_spark.config import CrawlConfig
-from indigo_crawler_spark.kernels.canonicalize import canonicalize_url
+from indigo_crawler_spark.kernels.canonicalize import CanonPolicy, canonicalize_url
 from indigo_crawler_spark.kernels.priority import priority_score
 from indigo_crawler_spark.kernels.robots import (
     crawl_delay,
@@ -73,22 +73,24 @@ class OracleCrawl:
 
     def __init__(self, pages, seeds, robots, host_budgets, cfg: CrawlConfig | None = None):
         self.cfg = cfg or CrawlConfig()
-        # cfg.strip_tracking_enabled / cfg.collapse_www_enabled /
-        # cfg.sort_query_enabled thread into EVERY canonicalization —
-        # SEMANTICS.md §Tracking parameters / §WWW collapse / §Sorted query
+        # the six canonicalization knobs thread into EVERY canonicalization
         # (mirror of the engine, where make_canonicalize_udf / the extract
-        # kernels carry the same flags)
-        st = self.cfg.strip_tracking_enabled
-        cw = self.cfg.collapse_www_enabled
-        sq = self.cfg.sort_query_enabled
-        ss = self.cfg.strip_session_enabled
-        ph = self.cfg.prefer_https_enabled
-        ci = self.cfg.collapse_index_enabled
+        # kernels carry cfg.canon_policy). Built here field by field, not
+        # read from cfg.canon_policy: the oracle is the reference, so a
+        # mis-built property must show up as engine != oracle.
+        self.policy = policy = CanonPolicy(
+            strip_tracking=self.cfg.strip_tracking_enabled,
+            collapse_www=self.cfg.collapse_www_enabled,
+            sort_query=self.cfg.sort_query_enabled,
+            strip_session=self.cfg.strip_session_enabled,
+            prefer_https=self.cfg.prefer_https_enabled,
+            collapse_index=self.cfg.collapse_index_enabled,
+        )
         # --- page store: canonicalize, dedup per canon_url keep min (warc_ts, url)
         self.store: dict[str, dict] = {}
         quarantined = 0
         for row in pages:
-            c = canonicalize_url(row["url"], st, cw, sq, ss, ph, ci)
+            c = canonicalize_url(row["url"], *policy)
             if c is None:
                 quarantined += 1
                 continue
@@ -112,7 +114,7 @@ class OracleCrawl:
         best: dict[str, int | None] = {}
         self.quarantined_seeds = 0
         for s in seeds:
-            c = canonicalize_url(s["url"], st, cw, sq, ss, ph, ci)
+            c = canonicalize_url(s["url"], *policy)
             if c is None:
                 self.quarantined_seeds += 1
                 continue
@@ -125,7 +127,7 @@ class OracleCrawl:
         if self.cfg.sitemaps_enabled and self.cfg.robots_enabled:
             for txt in self.robots.values():
                 for u in robots_sitemaps(txt):
-                    c = canonicalize_url(u, st, cw, sq, ss, ph, ci)
+                    c = canonicalize_url(u, *policy)
                     if c is None:
                         continue
                     self.sitemap_seed_urls += 1
@@ -183,15 +185,7 @@ class OracleCrawl:
         host_count (the priority input) intentionally stays frozen at its
         bootstrap value — see streaming/skin.py docstring."""
         for row in pages:
-            c = canonicalize_url(
-            row["url"],
-            self.cfg.strip_tracking_enabled,
-            self.cfg.collapse_www_enabled,
-            self.cfg.sort_query_enabled,
-            self.cfg.strip_session_enabled,
-            self.cfg.prefer_https_enabled,
-            self.cfg.collapse_index_enabled,
-        )
+            c = canonicalize_url(row["url"], *self.policy)
             if c is None:
                 continue
             cur = self.store.get(c)
@@ -205,15 +199,7 @@ class OracleCrawl:
         set (re-crawlable on rediscovery); unknown urls are no-ops."""
         n = 0
         for u in urls:
-            c = canonicalize_url(
-                u,
-                self.cfg.strip_tracking_enabled,
-                self.cfg.collapse_www_enabled,
-                self.cfg.sort_query_enabled,
-                self.cfg.strip_session_enabled,
-                self.cfg.prefer_https_enabled,
-                self.cfg.collapse_index_enabled,
-            )
+            c = canonicalize_url(u, *self.policy)
             if c is not None and c in self.seen:
                 del self.seen[c]
                 n += 1
@@ -228,15 +214,7 @@ class OracleCrawl:
         (unknown host -> 0)."""
         best: dict[str, int] = {}
         for u in urls:
-            c = canonicalize_url(
-                u,
-                self.cfg.strip_tracking_enabled,
-                self.cfg.collapse_www_enabled,
-                self.cfg.sort_query_enabled,
-                self.cfg.strip_session_enabled,
-                self.cfg.prefer_https_enabled,
-                self.cfg.collapse_index_enabled,
-            )
+            c = canonicalize_url(u, *self.policy)
             if c is None:
                 continue
             if c not in best or seed_rank < best[c]:
@@ -550,20 +528,13 @@ class OracleCrawl:
                 (
                     text, links, noindex, nofollow, canonical, refresh,
                     adrop, alts,
-                ) = (
-                    extract_text_links_signals(
-                        page["html"],
-                        row.canon_url,
-                        cfg.sitemaps_enabled,
-                        cfg.anchor_nofollow_enabled,
-                        cfg.strip_tracking_enabled,
-                        cfg.collapse_www_enabled,
-                        cfg.sort_query_enabled,
-                        cfg.strip_session_enabled,
-                        cfg.prefer_https_enabled,
-                        cfg.collapse_index_enabled,
-                        hreflang=cfg.hreflang_enabled,
-                    )
+                ) = extract_text_links_signals(
+                    page["html"],
+                    row.canon_url,
+                    cfg.sitemaps_enabled,
+                    cfg.anchor_nofollow_enabled,
+                    self.policy,
+                    cfg.hreflang_enabled,
                 )
                 if cfg.anchor_nofollow_enabled:
                     # anchor-level rel=nofollow (mirror of extract_pages —
@@ -604,15 +575,7 @@ class OracleCrawl:
                         self.redirects.discard(row.canon_url)
             else:
                 text, links = extract_text_and_links(
-                    page["html"],
-                    row.canon_url,
-                    cfg.sitemaps_enabled,
-                    cfg.strip_tracking_enabled,
-                    cfg.collapse_www_enabled,
-                    cfg.sort_query_enabled,
-                    cfg.strip_session_enabled,
-                    cfg.prefer_https_enabled,
-                    cfg.collapse_index_enabled,
+                    page["html"], row.canon_url, cfg.sitemaps_enabled, self.policy
                 )
                 nofollow = False
             res.texts[row.canon_url] = text

@@ -7,8 +7,15 @@ import pytest
 
 from fixtures.gen import TINY, fixture_bundle
 from indigo_crawler_spark.config import CrawlConfig
+from indigo_crawler_spark.operators.sampling import sample_corpus
+from indigo_crawler_spark.plans import export
 from indigo_crawler_spark.plans.export import export_corpus
-from indigo_crawler_spark.plans.round import CrawlState, bootstrap, run_rounds
+from indigo_crawler_spark.plans.round import (
+    CrawlState,
+    bootstrap,
+    run_rounds,
+    session_conf,
+)
 from indigo_crawler_spark.plans.state_gc import gc_state
 from indigo_crawler_spark.operators.retire import retire_urls
 from indigo_crawler_spark.sources.fixture_df import (
@@ -654,3 +661,45 @@ def test_derived_product_refuses_extension(spark, crawled_export, kind, label):
     if kind in ("mirror", "host"):
         with pytest.raises(RuntimeError, match="not a corpus"):
             _make_product(spark, "normalize", state, out, str(root / f"{kind}_src"))
+
+
+# an emptied frame per derived stage; "all" stands for the corpus row count
+_EMPTIED = {
+    # every row is below the word floor
+    "filter": (
+        lambda spark, src, out: export.filter_corpus(spark, src, out, min_words=10**9),
+        {"rows_in": "all", "rows_out": 0},
+    ),
+    # a zero rate keeps no row
+    "sample": (
+        lambda spark, src, out: sample_corpus(spark, src, out, rate=0.0),
+        {"rows_in": "all", "rows_out": 0},
+    ),
+    # no line repeats across a million documents: the hot-line set is empty
+    "scrub": (
+        lambda spark, src, out: export.scrub_corpus(spark, src, out, min_docs=10**6),
+        {"rows": "all", "hot_lines": 0},
+    ),
+    # no pair is this similar: the near-dup pair frame is empty
+    "dedup": (
+        lambda spark, src, out: export.dedup_corpus(
+            spark, src, out, near_threshold=0.99
+        ),
+        {"rows_in": "all", "near_dropped": 0},
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_EMPTIED))
+def test_derived_stage_counts_an_emptied_frame(spark, crawled_export, kind):
+    """With AQE on, a stage whose frame ends up empty before an action still
+    reports its true counts. AQE's empty-relation propagation used to prune
+    the observed node, and Observation.get failed."""
+    _, corpus, root = crawled_export
+    make, want = _EMPTIED[kind]
+    rows = spark.read.parquet(corpus).count()
+    with session_conf(spark, **{"spark.sql.adaptive.enabled": "true"}):
+        got = make(spark, corpus, str(root / f"{kind}_emptied"))
+    assert {k: got[k] for k in want} == {
+        k: rows if v == "all" else v for k, v in want.items()
+    }

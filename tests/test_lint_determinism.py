@@ -8,10 +8,14 @@ pruning list — all O(P) or O(counters), never O(rows)).
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
+from indigo_crawler_spark.kernels.canonicalize import CanonPolicy
+
 ENGINE = Path(__file__).resolve().parent.parent / "indigo_crawler_spark"
+ORACLE = ENGINE.parent / "oracle"
 
 BANNED = [
     (r"\brandom\b", "RNG"),
@@ -58,3 +62,23 @@ def test_oracle_shares_kernels():
     sim = (Path(__file__).resolve().parent.parent / "oracle" / "simulator.py").read_text()
     for kernel in ("canonicalize", "priority", "robots", "textextract"):
         assert f"kernels.{kernel}" in sim, f"oracle must import shared kernel {kernel}"
+
+
+def test_canon_rules_stay_behind_one_module():
+    """The six URL-alias rules travel as one CanonPolicy: outside the kernel
+    that applies them, no function takes a parameter named after a rule."""
+    kernel = ENGINE / "kernels" / "canonicalize.py"
+    offenders = []
+    for path in sorted([*ENGINE.rglob("*.py"), *ORACLE.rglob("*.py")]):
+        if path == kernel:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                params = [*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg]
+                offenders += [
+                    f"{path.relative_to(ENGINE.parent)}:{node.lineno} {p.arg}"
+                    for p in params
+                    if p is not None and p.arg in CanonPolicy._fields
+                ]
+    assert not offenders, offenders

@@ -3,6 +3,8 @@ small round is handed back as found when the round ends."""
 
 from __future__ import annotations
 
+import pytest
+
 from fixtures.gen import TINY, fixture_bundle
 from indigo_crawler_spark.config import CrawlConfig
 from indigo_crawler_spark.plans.round import CrawlState, bootstrap, run_rounds
@@ -14,13 +16,14 @@ from indigo_crawler_spark.sources.fixture_df import (
 )
 from indigo_crawler_spark.sources.table_io import TableIO
 
-KEY = "spark.sql.shuffle.partitions"
-
-
-def test_round_restores_unset_shuffle_partitions(spark, tmp_path):
-    """On a session that never set spark.sql.shuffle.partitions, a small
-    round (which runs at a lowered partition count) must leave the
-    effective value as it found it — not its own small-round value."""
+@pytest.mark.parametrize(
+    "key, small_round_value",
+    [("spark.sql.shuffle.partitions", "8"), ("spark.sql.adaptive.enabled", "false")],
+)
+def test_round_restores_unset_conf(spark, tmp_path, key, small_round_value):
+    """On a session that never set *key*, a small round (which runs at a
+    lowered partition count with AQE off) must leave the key as it found it:
+    unset, reading the session default — not its own small-round value."""
     cfg = CrawlConfig(round_limit=50, num_buckets=16, bloom_bucket_capacity=64)
     fb = fixture_bundle(**TINY)
     state = CrawlState(io=TableIO(spark, str(tmp_path / "crawl")), cfg=cfg)
@@ -32,12 +35,16 @@ def test_round_restores_unset_shuffle_partitions(spark, tmp_path):
         budgets_df(spark, fb["host_budgets"]),
         state,
     )
-    configured = spark.conf.get(KEY)
+    configured = spark.conf.get(key, None)
     try:
-        spark.conf.unset(KEY)
-        before = spark.conf.get(KEY)
-        assert before != configured  # the session default, not the fixture's
+        spark.conf.unset(key)
+        before = spark.conf.get(key)
+        assert before != small_round_value  # the session default
         run_rounds(spark, state, 1)
-        assert spark.conf.get(KEY) == before
+        assert spark.conf.get(key, None) is None
+        assert spark.conf.get(key) == before
     finally:
-        spark.conf.set(KEY, configured)
+        if configured is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, configured)

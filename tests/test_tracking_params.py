@@ -25,6 +25,7 @@ from fixtures.gen import TINY, fixture_bundle
 from indigo_crawler_spark.config import CrawlConfig
 from indigo_crawler_spark.kernels.canonicalize import (
     TRACKING_PARAMS,
+    CanonPolicy,
     canonicalize_url,
     strip_tracking_params,
 )
@@ -109,7 +110,7 @@ def test_flag_off_byte_identity():
 def test_extraction_strips_links_not_text():
     base = "https://h1.example.org/trk-hub"
     t0, l0 = extract_text_and_links(TRK_HUB, base)
-    t1, l1 = extract_text_and_links(TRK_HUB, base, strip_tracking=True)
+    t1, l1 = extract_text_and_links(TRK_HUB, base, policy=CanonPolicy(strip_tracking=True))
     assert t1 == t0  # text byte-identical
     assert l0 == [
         "https://trk.example.org/child?utm_source=feed&utm_campaign=x",
@@ -121,13 +122,13 @@ def test_extraction_strips_links_not_text():
     assert l1 == ["https://trk.example.org/child"] * 4
     # real params survive next to stripped ones
     _, lc = extract_text_and_links(
-        TRK_CHILD, "https://trk.example.org/child", strip_tracking=True
+        TRK_CHILD, "https://trk.example.org/child", policy=CanonPolicy(strip_tracking=True)
     )
     assert lc == ["https://trk.example.org/leaf?page=2"]
     # the signals surface threads the same flag (canonical/refresh targets
     # covered by the shared canonical_target path)
     _, ls, *_ = extract_text_links_signals(
-        TRK_HUB, base, strip_tracking=True
+        TRK_HUB, base, policy=CanonPolicy(strip_tracking=True)
     )
     assert ls == l1
 
