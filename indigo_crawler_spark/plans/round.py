@@ -85,18 +85,21 @@ def _obs_int(obs: Observation, name: str) -> int:
 # (operators/politeness.global_rank). Physical knob only.
 _RANK_SINGLE_MAX = 200_000
 
-# Reduce-partition count for SMALL rounds (the same manifest-derived
-# ``rank_single`` marker that drives the AQE policy): a round whose committed
-# frontier bound is ≤ _RANK_SINGLE_MAX rows needs a handful of reduce
-# partitions, not the session default sized for at-scale rounds — every
-# extra near-empty task is pure scheduling overhead on the round's many small
-# shuffles, and every extra shuffle partition becomes one more near-empty
-# file under the frontier write. Scale-adaptive, not machine-tuned: the
-# trigger is the committed row bound, the at-scale default is untouched, and
-# every operator is partition-count-independent by construction (content-XOR
-# digests, min_by dedups, offset-based ranks — SEMANTICS.md determinism
-# rules), so results are identical at any value.
-_SMALL_ROUND_SHUFFLE = 8
+# Rows per reduce task in SMALL rounds (the same manifest-derived
+# ``rank_single`` marker that drives the AQE policy). A round whose committed
+# frontier bound is ≤ _RANK_SINGLE_MAX rows runs every shuffle in its
+# session-conf scope at ceil(bound / _SMALL_ROUND_ROWS_PER_TASK) reduce
+# partitions, at least 1. The figure is r6's: it sized small rounds at 8
+# partitions for the 200k-row trigger, i.e. 25k rows per task; the count is
+# still 8 there and falls to 1 below 25k rows. Each extra near-empty task is
+# pure overhead on the round's many small shuffles — a Python invocation in
+# the membership-filter folds, one more near-empty file under the frontier
+# write. Scale-adaptive, not machine-tuned: the count follows the committed
+# row bound, at-scale rounds keep the session's setting, and every operator
+# is partition-count-independent by construction (content-XOR digests,
+# min_by dedups, offset-based ranks — SEMANTICS.md determinism rules), so
+# results are identical at any count (tests/test_shuffle_count_invariance.py).
+_SMALL_ROUND_ROWS_PER_TASK = 25_000
 
 # Host-dimension row bound below which the robots / host_counts joins
 # broadcast the dimension instead of SHUFFLE_HASH. robots carries text blobs,
@@ -105,6 +108,12 @@ _SMALL_ROUND_SHUFFLE = 8
 # blobs — remains the at-scale default. Physical knob only; read once per
 # round from the bootstrap manifest, never counted.
 _DIM_BROADCAST_MAX = 100_000
+
+# Emitted-row bound (the round's known ≤K emitted count) up to which the
+# emitted slice is broadcast into the page-store join and the frontier's
+# anti-join; above it both sides plan SHUFFLE_HASH instead, so a
+# production-K round never serializes a giant broadcast build.
+_EMITTED_BROADCAST_MAX = 200_000
 
 
 # Process-level cache for the round's STATIC Column expression trees (r6):
@@ -972,13 +981,15 @@ def run_round(
     # ~0.3-0.4s/round here. At-scale rounds keep AQE for the
     # variable-shape discovery suffix (skew splits, partition coalescing)
     # exactly as before; the session conf is restored when the round ends.
-    # Small rounds also shrink the reduce-partition count (r6 second pass —
-    # guide §2.2 fewer/larger partitions, §6 small files): see
-    # _SMALL_ROUND_SHUFFLE.
+    # Small rounds also size the reduce-partition count by their row bound
+    # (r6 — guide §2.2 fewer/larger partitions, §6 small files): see
+    # _SMALL_ROUND_ROWS_PER_TASK.
     small_round = (
         {
             "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": str(_SMALL_ROUND_SHUFFLE),
+            "spark.sql.shuffle.partitions": str(
+                max(1, -(-rank_bound // _SMALL_ROUND_ROWS_PER_TASK))
+            ),
         }
         if rank_single
         else {}
@@ -1221,8 +1232,8 @@ def run_round(
                 else emitted
             )
             emitted_sel = fetch_src.select("canon_url", "depth")
-            small_round = n_emitted <= 200_000
-            if small_round:
+            broadcast_emitted = n_emitted <= _EMITTED_BROADCAST_MAX
+            if broadcast_emitted:
                 fetched = store.join(
                     F.broadcast(emitted_sel), on="canon_url", how="inner"
                 )
@@ -1622,7 +1633,7 @@ def run_round(
             # the frontier sheds the DONE slice only — retained transient
             # failures stay for re-emission (SEMANTICS.md §Transient failures)
             emitted_urls = emitted_done.select("canon_url")
-            if not small_round:
+            if not broadcast_emitted:
                 emitted_urls = emitted_urls.hint("SHUFFLE_HASH")
             else:
                 emitted_urls = F.broadcast(emitted_urls)

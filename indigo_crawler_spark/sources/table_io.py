@@ -46,7 +46,9 @@ class TableIO:
     # cached=True)` memoizes the lazy PLAN object — never data; nothing is
     # persisted and every job still scans the files — and every mutation
     # seam (write / rewrite / delete) invalidates the entry, so a replayed
-    # or rewritten table is re-listed before its next read.
+    # or rewritten table is re-listed before its next read. Keyed table →
+    # schema → plan: a read with another schema (or none) gets its own plan,
+    # while invalidation drops every schema of a table at once.
     _read_cache: dict = field(default_factory=dict, repr=False)
 
     def __post_init__(self) -> None:
@@ -159,17 +161,17 @@ class TableIO:
         cached: bool = False,
     ) -> DataFrame:
         """``cached=True`` reuses the lazy DataFrame plan built by an earlier
-        cached read of the same table (parquet backend only; plan reuse, not
-        data caching — see ``_read_cache``). Only for call sites that pass a
-        FIXED schema per table and re-read across rounds; a missing dir is
-        never cached (the table may appear later)."""
+        cached read of the same table with the same schema (parquet backend
+        only; plan reuse, not data caching — see ``_read_cache``). For call
+        sites that re-read a table across rounds; a missing dir is never
+        cached (the table may appear later)."""
         if self.fmt == "iceberg":
             r = self.spark.read
             if snapshot_id is not None:
                 r = r.option("snapshot-id", str(snapshot_id))
             return r.table(self._ident(table))
         if cached:
-            hit = self._read_cache.get(table)
+            hit = self._read_cache.get(table, {}).get(schema)
             if hit is not None:
                 return hit
         self._repair(table)  # heal a crash mid-rewrite before reading
@@ -183,7 +185,7 @@ class TableIO:
             r = r.schema(schema)
         df = r.parquet(p)
         if cached:
-            self._read_cache[table] = df
+            self._read_cache.setdefault(table, {})[schema] = df
         return df
 
     def _exists(self, p: str) -> bool:

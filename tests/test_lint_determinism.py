@@ -82,3 +82,59 @@ def test_canon_rules_stay_behind_one_module():
                     if p is not None and p.arg in CanonPolicy._fields
                 ]
     assert not offenders, offenders
+
+
+# (file relative to the repo root, enclosing function) pairs allowed to call
+# spark.conf.set/unset: the one scoped setter, and the permanent AQE-off of
+# the analog-query table reader ``_t`` (its comment says why no scope can
+# cover it)
+CONF_SETTERS = {
+    ("indigo_crawler_spark/plans/round.py", "session_conf"),
+    ("__spark_entry__.py", "_t"),
+}
+
+
+def _conf_calls(tree: ast.AST):
+    """Yield (enclosing function name or None, lineno) for every
+    ``<x>.conf.set(...)`` / ``<x>.conf.unset(...)`` call in *tree*."""
+
+    def walk(node, func):
+        for child in ast.iter_child_nodes(node):
+            inner = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("set", "unset")
+                and isinstance(child.func.value, ast.Attribute)
+                and child.func.value.attr == "conf"
+            ):
+                yield inner, child.lineno
+            yield from walk(child, inner)
+
+    yield from walk(tree, None)
+
+
+def test_session_conf_set_only_in_one_scope():
+    """The engine scopes a session conf one way, ``session_conf``: no other
+    code under the engine, the oracle, ``__spark_entry__.py``, jobs or tools sets
+    or unsets a session conf key."""
+    root = ENGINE.parent
+    files = [
+        *ENGINE.rglob("*.py"),
+        *ORACLE.rglob("*.py"),
+        *(root / "jobs").rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        root / "__spark_entry__.py",
+    ]
+    found, offenders = set(), []
+    for path in sorted(files):
+        rel = path.relative_to(root).as_posix()
+        for func, line in _conf_calls(ast.parse(path.read_text())):
+            if (rel, func) in CONF_SETTERS:
+                found.add((rel, func))
+            else:
+                offenders.append(f"{rel}:{line} in {func}")
+    assert not offenders, offenders
+    assert found == CONF_SETTERS  # a vacuous walk would pass the check above

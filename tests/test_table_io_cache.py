@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from indigo_crawler_spark.sources.table_io import TableIO
 
@@ -73,3 +74,22 @@ def test_nested_path_invalidation(spark, io):
     # ... but a write to the parent path must drop every nested entry
     io._invalidate("chain")
     assert "chain/round=0" not in io._read_cache
+
+
+def test_cached_read_keys_by_schema(spark, io):
+    """Two cached reads of one table with different schemas each get their
+    own plan and columns — a cached plan built under one schema is never
+    handed to a read that asked for another."""
+    io.write(spark.createDataFrame([(1, "a")], "v int, w string"), "t")
+    narrow = io.read("t", StructType([StructField("v", IntegerType())]), cached=True)
+    wide = io.read(
+        "t",
+        StructType([StructField("v", IntegerType()), StructField("w", StringType())]),
+        cached=True,
+    )
+    assert narrow.columns == ["v"]
+    assert wide.columns == ["v", "w"]
+    assert [tuple(r) for r in wide.collect()] == [(1, "a")]
+    assert io.read("t", narrow.schema, cached=True) is narrow
+    io.write(_df(spark, [2]), "t")
+    assert "t" not in io._read_cache  # a write drops every schema's plan
